@@ -1,7 +1,8 @@
 package graft.app
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+
+import graft.operators.Aggregates
 
 /** R6 counter stdout report (handlers/counter.go:326-445): the formatted
   * text report with totals, (+delta) between reporting windows (A3 — the
@@ -19,17 +20,21 @@ object CounterReport {
       totals: Map[String, Long],
       keyed: Map[String, Map[String, Long]])
 
-  /** collect a snapshot from a parsed DF (two small jobs) */
+  /** collect a snapshot from a parsed DF: one pass, one small collect.
+    * Empty input gives all-zero totals and no keyed dimensions.
+    */
   def snapshot(parsed: DataFrame): Snapshot = {
-    val t = graft.operators.Aggregates.totals(parsed).collect()(0)
+    val (totalRows, keyedRows) = Aggregates.counterCounts(parsed).collect()
+      .partition(_.getString(0) == Aggregates.TotalsDim)
+    val t = totalRows.map(r => r.getString(1) -> r.getLong(2)).toMap.withDefaultValue(0L)
     val totals = Map(
-      "Total log lines" -> t.getLong(0),
-      "Total requests" -> t.getLong(1),
-      "Total bytes sent" -> t.getLong(2),
-      "Requests by humans" -> t.getLong(3),
-      "Requests by non-humans" -> t.getLong(4),
-      "Malicious requests" -> t.getLong(5))
-    val keyed = graft.operators.Aggregates.keyedCounts(parsed).collect()
+      "Total log lines" -> t("handled_entries"),
+      "Total requests" -> t("handled_entries"),
+      "Total bytes sent" -> t("total_bytes"),
+      "Requests by humans" -> t("humans"),
+      "Requests by non-humans" -> t("non_humans"),
+      "Malicious requests" -> t("malicious_requests"))
+    val keyed = keyedRows
       .groupBy(_.getString(0))
       .map { case (dim, rows) =>
         dim -> rows.map(r => Option(r.getString(1)).getOrElse("") -> r.getLong(2)).toMap

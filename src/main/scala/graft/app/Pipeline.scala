@@ -170,8 +170,9 @@ object Pipeline {
     val parsed = ParseStage.parse(transcripts)
     val routed = Route.withSink(parsed)
 
-    // fan-out with lineage (idempotent resume)
-    val manifest = Route.fanOutWithLineage(routed, s"$outDir/routed", partitions = 32)
+    // fan-out with lineage (idempotent resume), as wide as the session's shuffles
+    val lineage = Route.fanOutWithLineage(routed, s"$outDir/routed",
+      partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
     var report = ""
     if (cfg.handlers.contains("COUNTER")) {
@@ -193,7 +194,8 @@ object Pipeline {
     Sinks.writeRawLogs(parsed, s"$outDir/rawlogs", cfg.saveLogsToDbMaskIps,
       cfg.saveLogsToDbOnlyRelevant, cfg.hostId)
 
-    val rows = parsed.count()
+    // counted by the fan-out's stats pass, or read from its stored manifest
+    val rows = lineage.rows
 
     // S5 analog: job-metrics snapshot next to the lineage manifest — rows
     // processed plus a best-effort host sample through the reference's
@@ -210,7 +212,7 @@ object Pipeline {
     java.nio.file.Files.createDirectories(mp.getParent)
     java.nio.file.Files.writeString(mp, jm)
 
-    Result(manifest, report, rows)
+    Result(lineage.manifest, report, rows)
   }
 
   /** spark-submit entry: args = sfDir outDir [configJsonPath]. A config is

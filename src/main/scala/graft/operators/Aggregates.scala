@@ -47,6 +47,35 @@ object Aggregates {
       .agg(count(lit(1)).as("cnt"))
   }
 
+  /** dim label under which `counterCounts` reports the A1 totals */
+  val TotalsDim = "_totals"
+
+  /** A1 + A2 fused for the COUNTER handler: the totals and the 9 keyed
+    * dimensions as one long (dim, key, cnt) table from one explode and ONE
+    * hash aggregate. Totals come under `TotalsDim`, keyed by `totals`'
+    * column names (total_requests equals handled_entries, so only the
+    * latter is emitted); a total nothing counted toward is absent, and
+    * every sum is coalesced, so empty input yields no NULL.
+    */
+  def counterCounts(parsed: DataFrame): DataFrame = {
+    def entry(dim: String, key: Column, inc: Column): Column =
+      struct(lit(dim).as("dim"), key.cast("string").as("key"), inc.cast("long").as("inc"))
+    def total(name: String, inc: Column): Column = entry(TotalsDim, lit(name), inc)
+    val entries = counterDims.map { case (dim, c) => entry(dim, col(c), lit(1L)) } ++ Seq(
+      total("handled_entries", lit(1L)),
+      total("total_bytes", col("bytes_sent")),
+      when(col("ua_human") === "Human", total("humans", lit(1L))),
+      when(col("ua_human") === "NonHuman", total("non_humans", lit(1L))),
+      when(col("malicious") =!= 0, total("malicious_requests", lit(1L))))
+    // null entries (unsatisfied `when`s) are dropped after the explode, as
+    // in metricRows
+    parsed
+      .select(explode(array(entries: _*)).as("e"))
+      .filter(col("e").isNotNull)
+      .groupBy(col("e.dim").as("dim"), col("e.key").as("key"))
+      .agg(coalesce(sum(col("e.inc")), lit(0L)).as("cnt"))
+  }
+
   /** A4 top-N per dimension with a deterministic tie-break (key asc) — the
     * reference breaks ties by Go map iteration order, i.e. nondeterminism we
     * deliberately do not reproduce (SURVEY.md §2 A4).

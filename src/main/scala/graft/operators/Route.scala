@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * of one job per handler.
   *
   * Skew handling per the north rule: salted repartition on conv_id (hot
-  * conversations would otherwise pin single tasks), followed by
-  * sortWithinPartitions(conv_id, turn_idx) so the per-turn text-equality
-  * invariant holds under a stable order inside every file written.
+  * conversations would otherwise pin single tasks), followed by one sort
+  * within partitions by (sink, bucket, conv_id, turn_idx). The partition
+  * columns lead, so the partitioned writer keeps that order instead of
+  * planning its own sort, and the per-turn text-equality invariant holds
+  * under a stable (conv_id, turn_idx) order inside every file written.
   */
 object Route {
 
@@ -48,12 +50,14 @@ object Route {
   /** Salted exchange + in-partition stable order (north rule). The salt only
     * spreads rows of one conversation across SALT tasks; aggregates are
     * salt-insensitive because keys re-merge in their own final aggregation.
+    * Rows are sorted by `sortPrefix`, then (conv_id, turn_idx).
     */
-  def salted(parsed: DataFrame, partitions: Int, salt: Int = 16): DataFrame =
+  def salted(parsed: DataFrame, partitions: Int, salt: Int = 16,
+      sortPrefix: Seq[String] = Nil): DataFrame =
     parsed
       .withColumn("_salt", pmod(hash(col("turn_idx")), lit(salt)))
       .repartition(partitions, col("conv_id"), col("_salt"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions((sortPrefix ++ Seq("conv_id", "turn_idx")).map(col): _*)
       .drop("_salt")
 
   /** Go field-name projection for the WRITE_TO_FILE JSON sink (R2,
@@ -159,18 +163,38 @@ object Route {
     date_format(ParseStage.localTs(col("log_ts"), col("tz_offset_sec")), "yyyyMMdd"),
     lit("00010101"))
 
+  /** What a fan-out leaves: the manifest JSON and the input's row total. */
+  final case class Lineage(manifest: String, rows: Long)
+
+  /** partition columns of the fan-out write; they also lead its sort */
+  private val fanOutPartitionCols = Seq("sink", "bucket")
+
+  private val manifestReader = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** the input row total a stored manifest records; None if it is unreadable */
+  private def storedRows(manifest: String): Option[Long] =
+    try Some(manifestReader.readTree(manifest).path("input").path("rows"))
+      .filter(_.isIntegralNumber).map(_.asLong)
+    catch { case _: java.io.IOException => None }
+
   /** Multi-sink fan-out with per-partition lineage manifest + resume.
     * One salted pass, one write partitioned by (sink, event-day bucket) —
     * content-stable partition keys, not task ids (SURVEY.md §7.4 item 5).
+    * The exchange is `partitions` wide (`Pipeline.run` passes the session's
+    * `spark.sql.shuffle.partitions`) and each task sorts its rows by
+    * (sink, bucket, conv_id, turn_idx) — the only sort in the write's plan —
+    * so every file is in (conv_id, turn_idx) order.
     * The manifest records per-(sink, bucket) row counts and order-free
     * checksums plus the input fingerprint; a rerun over the same input
     * finds the matching manifest and skips the write entirely — the
     * checkpoint-resume contract (north rule). A changed input (different
-    * fingerprint) rewrites and re-manifests.
+    * fingerprint) rewrites and re-manifests. The fingerprint covers the
+    * written plan, its exchange width and sort included, so output written
+    * under another layout (any earlier sort order) is rewritten once.
     *
-    * Returns the manifest JSON string.
+    * Returns the manifest JSON and the input's row total.
     */
-  def fanOutWithLineage(routed: DataFrame, outDir: String, partitions: Int): String = {
+  def fanOutWithLineage(routed: DataFrame, outDir: String, partitions: Int): Lineage = {
     val manifestPath = Paths.get(outDir, "_lineage", "manifest.json")
     // ZERO-SCAN resume tier (r5): fingerprint the input's FILE METADATA
     // (sorted paths + lengths — a listing, no data read; the Iceberg
@@ -180,6 +204,8 @@ object Route {
     // preserves the original contract (identical CONTENT still skips the
     // write at the cost of one stats scan).
     val inputFiles = routed.inputFiles.sorted
+    val toWrite = salted(routed.withColumn("bucket", dayBucket), partitions,
+      sortPrefix = fanOutPartitionCols)
     // the (plan, layout) fingerprint, mixed into BOTH resume tiers: the
     // metadata tier (below) and the content tier's fpJson — ADVICE r5
     // (medium): the content fingerprint alone is a property of the INPUT
@@ -187,18 +213,18 @@ object Route {
     // partitions argument over unchanged input used to match the content
     // tier, skip the rewrite, and stamp the NEW plan's metadata fingerprint
     // onto output written by the OLD plan — every later run then served
-    // stale output through the zero-scan tier.
-    val planFp = routed.queryExecution.analyzed.semanticHash().toLong * 31L + partitions
+    // stale output through the zero-scan tier. The written plan's
+    // canonicalized semantic hash covers the routing and projection, the
+    // exchange width and the sort order.
+    val planFp = toWrite.queryExecution.analyzed.semanticHash().toLong
     val metaFp = {
       val hconf = routed.sparkSession.sparkContext.hadoopConfiguration
-      // covers the PIPELINE as well as the input: the routed plan's
-      // canonicalized semantic hash and the partitions argument are mixed
-      // in, so a changed routing/projection or layout over unchanged files
-      // re-runs instead of serving stale output (code-review r5); file
-      // modification time catches an in-place same-length rewrite
-      var h = 0xcbf29ce484222325L ^ routed.queryExecution.analyzed.semanticHash().toLong
+      // covers the PIPELINE as well as the input: the plan fingerprint is
+      // mixed in, so a changed routing/projection or layout over unchanged
+      // files re-runs instead of serving stale output; file modification
+      // time catches an in-place same-length rewrite
+      var h = 0xcbf29ce484222325L ^ planFp
       h *= 0x100000001b3L
-      h ^= partitions.toLong; h *= 0x100000001b3L
       inputFiles.foreach { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         h ^= graft.operators.Dedup.fnv1a(f); h *= 0x100000001b3L
@@ -217,7 +243,11 @@ object Route {
     // content tier
     if (inputFiles.nonEmpty && Files.exists(manifestPath)) {
       val existing = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (existing.contains(s""""input_files":$metaFp,""")) return existing // resume: no scan at all
+      if (existing.contains(s""""input_files":$metaFp,"""))
+        storedRows(existing) match {
+          case Some(rows) => return Lineage(existing, rows) // resume: no scan at all
+          case None => // unreadable manifest: recompute below
+        }
     }
     // ONE stats pass: per-(sink, bucket) rows/checksum/min/max, collected as
     // a bounded (sinks × day-buckets) result. The global input fingerprint
@@ -249,13 +279,12 @@ object Route {
           else existing.replaceFirst("\\{", s"""{"input_files":$metaFp,""")
         Files.write(manifestPath, refreshed.getBytes(StandardCharsets.UTF_8),
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        return refreshed
+        return Lineage(refreshed, totalRows)
       }
     }
 
-    salted(routed.withColumn("bucket", dayBucket), partitions)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("sink", "bucket")
+    toWrite.write.mode(SaveMode.Overwrite)
+      .partitionBy(fanOutPartitionCols: _*)
       .parquet(outDir + "/data")
 
     val perPartition = groups
@@ -266,6 +295,6 @@ object Route {
     Files.createDirectories(manifestPath.getParent)
     Files.write(manifestPath, manifest.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    manifest
+    Lineage(manifest, totalRows)
   }
 }

@@ -157,7 +157,8 @@ object LineParser {
 
   /** Hot-path timestamp parse, ALLOCATION-FREE for the exact 26-char layout:
     * packs (epochSeconds, offsetSeconds) into one long as
-    * epochSec * 131072 + (offset + 64800); TsNone = unparseable. Semantics
+    * epochSec * 131072 + (offset + 64800); TsNone = unparseable or out of
+    * the packed range (years past about ±2.2 million). Semantics
     * are exactly parseTimestamp's (same structural gate, same validation —
     * day-of-month per month like LocalDate.of, |offset| <= 18h like
     * ZoneOffset.ofTotalSeconds; anything structurally off falls back to the
@@ -191,10 +192,12 @@ object LineParser {
       }
     }
     // structurally off the fast layout: the strict formatter decides, exactly
-    // like parseTimestamp's tail
+    // like parseTimestamp's tail. Its signed years reach ±999,999,999, the
+    // packed form only about ±2.2 million: past that, TsNone (the overflow
+    // is an ArithmeticException)
     try {
       val o = OffsetDateTime.parse(s, tsFormat)
-      o.toEpochSecond * 131072L + (o.getOffset.getTotalSeconds + 64800L)
+      Math.multiplyExact(o.toEpochSecond, 131072L) + (o.getOffset.getTotalSeconds + 64800L)
     } catch { case _: Exception => TsNone }
   }
 

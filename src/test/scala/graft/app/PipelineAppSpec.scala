@@ -1,5 +1,9 @@
 package graft.app
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +14,9 @@ import graft.oracle.RefOracle
 import graft.sources.Tables
 
 class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
+
+  /** the transcripts table is synthesized per scale-factor name */
+  private val sf = "sf0.001"
 
   test("arrival-order metrics == batch sums on bounded-lateness data") {
     import spark.implicits._
@@ -88,6 +95,60 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Files.createTempDirectory("graft-offset2").toString,
       JobConfig(startFrom = -1, handlers = Seq()))
     assert(rEnd.rows == 0)
+  }
+
+  test("empty input with the default handlers: zero rows, every COUNTER total 0") {
+    // seek-to-end leaves no rows; sum() over none is NULL, which the
+    // counter pass must not read as a total (a streaming micro-batch with
+    // no rows reaches the same snapshot)
+    val r = Pipeline.run(spark, sf,
+      java.nio.file.Files.createTempDirectory("graft-empty").toString, JobConfig(startFrom = -1))
+    assert(r.rows == 0)
+    Seq("Total log lines", "Total requests", "Total bytes sent", "Requests by humans",
+      "Requests by non-humans", "Malicious requests").foreach { k =>
+      assert(r.report.contains(f"$k%-22s: 0\n"), r.report)
+    }
+  }
+
+  test("every fan-out file is in ascending (conv_id, turn_idx) order") {
+    val out = java.nio.file.Files.createTempDirectory("graft-order").toString
+    Pipeline.run(spark, sf, out)
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "routed", "data"))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      finally walk.close()
+    }
+    assert(files.nonEmpty)
+    val unordered = files.filter { f =>
+      // one small file reads back as one split, in file order
+      val keys = spark.read.parquet(f).select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq
+      keys != keys.sorted
+    }
+    assert(unordered.size == 0, s"${unordered.size} of ${files.size} files out of order")
+  }
+
+  test("one Pipeline.run launches at most 16 jobs and reads at most 8x its input records") {
+    // a guard against a pass creeping back: each extra action over the
+    // parsed table costs a job and a full read of the input
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, sf,
+        java.nio.file.Files.createTempDirectory("graft-passes").toString)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val inputRecords = 6000L // sf0.001 transcripts
+    assert(jobs.get <= 16, s"${jobs.get} jobs")
+    assert(records.get <= 8 * inputRecords, s"${records.get} records read")
   }
 
   test("JobConfig JSON loader") {

@@ -207,7 +207,19 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(m1 == m2)
     val files2 = new java.io.File(dir + "/data").listFiles().map(_.getName).toSet
     assert(files1 == files2)
-    assert(m1.contains("\"sink\":\"relevant\""))
+    assert(m1.manifest.contains("\"sink\":\"relevant\""))
+  }
+
+  test("a truncated lineage manifest is recomputed, not served") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-torn").toString
+    val routed = Route.withSink(ParseStage.parse(
+      graft.sources.Tables.transcripts(spark, "sf0.001")))
+    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    assert(first.rows == 6000L) // sf0.001 turns
+    // keeps the metadata fingerprint the zero-scan tier matches, loses the rest
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_lineage", "manifest.json"),
+      first.manifest.take(first.manifest.indexOf("\"input\":")))
+    assert(Route.fanOutWithLineage(routed, dir, partitions = 8) == first)
   }
 
   test("lineage fan-out reads the input at most twice (stats pass + write)") {

@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, SparkTestBase}
@@ -11,6 +15,8 @@ import graft.{SparkEntry, SparkTestBase}
 class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
+  /** plan traversal that looks inside adaptive plans and their stages */
+  private object AqeHelper extends AdaptiveSparkPlanHelper
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
@@ -163,6 +169,30 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("aggregate("), s"HOF aggregate is interpreted per element: ${p.take(600)}")
     assert(p.contains("*("), s"expected whole-stage codegen: ${p.take(600)}")
+  }
+
+  test("fan-out write plans exactly one sort, keyed (sink, bucket, conv_id, turn_idx)") {
+    // the partitioned writer sorts by (sink, bucket) unless its input
+    // already is; a plan with its own (sink, bucket) sort silently drops
+    // the (conv_id, turn_idx) order inside every file
+    val writePlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (AqeHelper.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writePlans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-fanout-plan").toString
+      val parsed = ParseStage.parse(graft.sources.Tables.transcripts(spark, sf))
+      Route.fanOutWithLineage(Route.withSink(parsed), dir, partitions = 4)
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writePlans.size == 1)
+    val sorts = AqeHelper.collect(writePlans.peek()) { case s: SortExec => s }
+    assert(sorts.map(_.sortOrder.flatMap(_.child.references.map(_.name))) ==
+      Seq(Seq("sink", "bucket", "conv_id", "turn_idx")), writePlans.peek().toString)
   }
 
   test("salted fan-out exchanges on (conv_id, salt) and sorts within partitions") {

@@ -123,6 +123,34 @@ object ParseProps extends Properties("graft.parse") {
     }
   }
 
+  property("tsEpochOff == parseTimestamp for years of up to 19 digits, TsNone past the packed range") = {
+    // the strict formatter takes 4-19 year digits, signed past 4;
+    // OffsetDateTime holds years up to ±999,999,999, but the packed
+    // epochSec * 131072 only reaches about year ±2.2 million
+    val genYear = for {
+      sign <- Gen.oneOf("", "+", "-")
+      n <- Gen.chooseNum(1, 19)
+      digits <- Gen.listOfN(n, Gen.numChar)
+    } yield sign + digits.mkString
+    val genTs = for {
+      year <- Gen.frequency(3 -> genYear,
+        1 -> Gen.oneOf("+2229999", "+2230000", "+999999999", "-999999999", "+1000000000"))
+      sign <- Gen.oneOf("+", "-")
+      offH <- Gen.chooseNum(0, 18)
+    } yield f"31/Dec/$year:23:59:59 $sign$offH%02d00"
+    forAll(genTs) { s =>
+      val packed = LineParser.tsEpochOff(s)
+      val unpacked =
+        if (packed == LineParser.TsNone) None
+        else Some((Math.floorDiv(packed, 131072L), (Math.floorMod(packed, 131072L) - 64800L).toInt))
+      val representable = (o: java.time.OffsetDateTime) =>
+        (BigInt(o.toEpochSecond) * 131072 + (o.getOffset.getTotalSeconds + 64800)).isValidLong
+      val expected = LineParser.parseTimestamp(s).filter(representable)
+        .map(o => (o.toEpochSecond, o.getOffset.getTotalSeconds))
+      Prop(unpacked == expected) :| s"ts=<$s> packed=$unpacked odt=$expected"
+    }
+  }
+
   property("uriFields memo == pathFields + utm regex for pool and fuzzed URIs") = {
     val genUri = Gen.frequency(
       3 -> Gen.oneOf(TranscriptGen.benignPaths ++ TranscriptGen.queryPaths ++
