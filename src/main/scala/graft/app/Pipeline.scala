@@ -169,23 +169,39 @@ object Pipeline {
     }
     val parsed = ParseStage.parse(transcripts)
     val routed = Route.withSink(parsed)
+    val metrics = cfg.handlers.contains("METRICS")
+    // J2: the parsed vhost domain, else the configured one (main.go:666-669)
+    val domainName = coalesce(nullif(col("domain"), lit("")), lit(cfg.domainName))
 
-    // fan-out with lineage (idempotent resume), as wide as the session's shuffles
+    // fan-out with lineage (idempotent resume), as wide as the session's
+    // shuffles; its stats pass also finds each conversation's domains
     val lineage = Route.fanOutWithLineage(routed, s"$outDir/routed",
-      partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      firstTurnsOf = Option.when(metrics)(domainName))
 
     var report = ""
     if (cfg.handlers.contains("COUNTER")) {
       report = CounterReport.format(CounterReport.snapshot(parsed), None,
         cfg.counterTopNForKeyedMetrics)
     }
-    if (cfg.handlers.contains("METRICS")) {
+    if (metrics) {
       val metricRows: DataFrame =
         if (cfg.arrivalOrderMetrics)
           MetricsArrivalOrder.metricRows(parsed, cfg.timeWindowSizeMinutes, cfg.metricsWindowSize).toDF()
         else Aggregates.metricRows(parsed, cfg.timeWindowSizeMinutes)
-      val domainDim = Enrich.withDomainId(parsed, cfg.domainName)
-        .select("conv_id", "domain_id").distinct()
+      // the domain dimension: the same ids as Enrich.withDomainId, numbered
+      // locally from each (conv_id, domain)'s first turn. A fan-out
+      // resumed without a scan found none, so the stats pass runs here.
+      // A match, not getOrElse: it keeps the collect's call site in this
+      // method, where perfbench's layer map attributes it.
+      val firstTurns = lineage.firstTurns match {
+        case Some(found) => found
+        case None => Route.firstTurns(Route.groupStats(routed, Some(domainName)).collect())
+      }
+      val ids = Enrich.firstSightIds(firstTurns).toMap
+      import spark.implicits._
+      val domainDim = firstTurns.map { case (domain, conv, _) => (conv, ids(domain)) }
+        .toDF("conv_id", "domain_id")
       Sinks.writeMetrics(metricRows, domainDim, s"$outDir/metrics", cfg.replaceExistingMetrics)
     }
     if (cfg.handlers.contains("WRITE_TO_FILE")) {

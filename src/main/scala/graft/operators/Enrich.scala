@@ -45,13 +45,21 @@ object Enrich {
       .agg(min(col("fk")).as("first_seen"))
       .collect()
     dims.map { d =>
-      d -> rows.filter(_.getString(0) == d)
-        .sortBy(r => (r.getStruct(2).getString(0), r.getStruct(2).getInt(1)))
-        .zipWithIndex
-        .map { case (r, i) => (r.getString(1), i + 1) }
-        .toSeq
+      d -> firstSightIds(rows.toSeq.filter(_.getString(0) == d)
+        .map(r => (r.getString(1), r.getStruct(2).getString(0), r.getStruct(2).getInt(1))))
     }.toMap
   }
+
+  /** The collected half of first-sight numbering: sightings (key, conv_id,
+    * turn_idx), any number per key, give each key the id of its earliest
+    * sighting's rank in (conv_id, turn_idx) order, from 1. Returns
+    * Seq[(key, id)] in id order.
+    */
+  def firstSightIds(sightings: Seq[(String, String, Int)]): Seq[(String, Int)] =
+    sightings
+      .groupMapReduce(_._1)(s => (s._2, s._3))(Ordering[(String, Int)].min)
+      .toSeq.sortBy(_._2)
+      .zipWithIndex.map { case ((key, _), i) => (key, i + 1) }
 
   private def dimDf(df: DataFrame, pairs: Seq[(String, Int)], keyCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession

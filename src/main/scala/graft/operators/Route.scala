@@ -3,7 +3,10 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 /** Routing / sink fan-out (SURVEY.md §2 R1-R4): a deterministic rule table
@@ -163,19 +166,74 @@ object Route {
     date_format(ParseStage.localTs(col("log_ts"), col("tz_offset_sec")), "yyyyMMdd"),
     lit("00010101"))
 
-  /** What a fan-out leaves: the manifest JSON and the input's row total. */
-  final case class Lineage(manifest: String, rows: Long)
+  /** the first turn of a conversation that carries a key: (key, conv_id, turn_idx) */
+  type FirstTurn = (String, String, Int)
+
+  /** What a fan-out leaves: the manifest JSON, the input's row total, and
+    * the first turns per (conv_id, key) when the caller asked for them and
+    * the stats pass ran (None when a resume tier served the call unscanned).
+    */
+  final case class Lineage(manifest: String, rows: Long, firstTurns: Option[Seq[FirstTurn]] = None)
 
   /** partition columns of the fan-out write; they also lead its sort */
   private val fanOutPartitionCols = Seq("sink", "bucket")
 
-  private val manifestReader = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val json = new ObjectMapper()
 
-  /** the input row total a stored manifest records; None if it is unreadable */
-  private def storedRows(manifest: String): Option[Long] =
-    try Some(manifestReader.readTree(manifest).path("input").path("rows"))
-      .filter(_.isIntegralNumber).map(_.asLong)
-    catch { case _: java.io.IOException => None }
+  /** The stats pass: one aggregate over `routed` for one or two group
+    * families, told apart by `per_conv`:
+    *  - per (sink, bucket): rows, an order-free checksum and the turn
+    *    range — the fan-out manifest's entries;
+    *  - per (conv_id, `firstTurnsOf`), when given: the first turn_idx.
+    * The checksum is hashed before the grouping sets duplicate the rows, so
+    * the line text goes no further than the projection.
+    */
+  def groupStats(routed: DataFrame, firstTurnsOf: Option[Column]): DataFrame = {
+    val perSink = Seq(col("sink"), col("bucket"))
+    val perConv = Seq(col("conv_id"), col("key"))
+    val sets = perSink +: firstTurnsOf.map(_ => perConv).toSeq
+    routed
+      .select(col("sink"), dayBucket.as("bucket"), col("conv_id"),
+        firstTurnsOf.getOrElse(lit(null)).cast("string").as("key"), col("turn_idx"),
+        xxhash64(col("conv_id"), col("turn_idx"), col("text")).as("h"))
+      .groupingSets(sets, perSink ++ perConv: _*)
+      .agg(
+        (grouping(col("sink")) === 1).as("per_conv"),
+        count(lit(1)).as("rows"),
+        coalesce(bit_xor(col("h")), lit(0L)).as("checksum"),
+        min(col("turn_idx")).as("min_turn"),
+        max(col("turn_idx")).as("max_turn"))
+  }
+
+  /** the per-conversation first turns among collected `groupStats` rows */
+  def firstTurns(stats: Array[Row]): Seq[FirstTurn] =
+    stats.toSeq.filter(_.getAs[Boolean]("per_conv"))
+      .map(r => (r.getAs[String]("key"), r.getAs[String]("conv_id"), r.getAs[Int]("min_turn")))
+
+  /** A fingerprint of the written plan that every process computes alike:
+    * the output schema, each node's name and the SQL of its expressions
+    * (routing rules, bucket, filters, projections, sort keys), and the
+    * exchange width, a node argument rather than an expression. The plan's
+    * `semanticHash` is not stable: it hashes the parse closure and the
+    * parquet file format by object identity, so it changed with every JVM.
+    */
+  private def planFingerprint(plan: LogicalPlan, partitions: Int): Long =
+    Dedup.fnv1a(plan.map { node =>
+      node.nodeName + node.expressions.map(_.sql).mkString("(", ",", ")")
+    }.mkString(s"${plan.schema.catalogString};$partitions;", ";", ""))
+
+  /** `field` of `node` when it is an integer in the long range */
+  private def longAt(node: JsonNode, field: String): Option[Long] =
+    Some(node.path(field)).filter(n => n.isIntegralNumber && n.canConvertToLong).map(_.asLong)
+
+  /** a stored manifest's input fingerprint (plan, rows, checksum); None
+    * unless all three are integers
+    */
+  private def storedInput(manifest: JsonNode): Option[(Long, Long, Long)] = {
+    val in = manifest.path("input")
+    for (plan <- longAt(in, "plan"); rows <- longAt(in, "rows"); sum <- longAt(in, "checksum"))
+      yield (plan, rows, sum)
+  }
 
   /** Multi-sink fan-out with per-partition lineage manifest + resume.
     * One salted pass, one write partitioned by (sink, event-day bucket) —
@@ -187,15 +245,24 @@ object Route {
     * The manifest records per-(sink, bucket) row counts and order-free
     * checksums plus the input fingerprint; a rerun over the same input
     * finds the matching manifest and skips the write entirely — the
-    * checkpoint-resume contract (north rule). A changed input (different
-    * fingerprint) rewrites and re-manifests. The fingerprint covers the
-    * written plan, its exchange width and sort included, so output written
-    * under another layout (any earlier sort order) is rewritten once.
+    * checkpoint-resume contract (north rule), in this process or another.
+    * A changed input (different fingerprint) rewrites and re-manifests. The
+    * fingerprint covers the written plan, its exchange width and sort
+    * included, so output written under another layout is rewritten once.
     *
-    * Returns the manifest JSON and the input's row total.
+    * `firstTurnsOf` adds the per-(conv_id, key) first-turn family to the
+    * stats pass (the metrics sink's domain dimension rides along this way).
+    *
+    * Returns the manifest JSON, the input's row total and those first turns.
     */
-  def fanOutWithLineage(routed: DataFrame, outDir: String, partitions: Int): Lineage = {
+  def fanOutWithLineage(routed: DataFrame, outDir: String, partitions: Int,
+      firstTurnsOf: Option[Column] = None): Lineage = {
     val manifestPath = Paths.get(outDir, "_lineage", "manifest.json")
+    val stored: Option[ObjectNode] =
+      try json.readTree(Files.readAllBytes(manifestPath)) match {
+        case m: ObjectNode => Some(m)
+        case _ => None // empty or not an object: recompute
+      } catch { case _: java.io.IOException => None } // missing or malformed
     // ZERO-SCAN resume tier (r5): fingerprint the input's FILE METADATA
     // (sorted paths + lengths — a listing, no data read; the Iceberg
     // analogue is comparing snapshot ids). A rerun over the byte-identical
@@ -207,16 +274,14 @@ object Route {
     val toWrite = salted(routed.withColumn("bucket", dayBucket), partitions,
       sortPrefix = fanOutPartitionCols)
     // the (plan, layout) fingerprint, mixed into BOTH resume tiers: the
-    // metadata tier (below) and the content tier's fpJson — ADVICE r5
-    // (medium): the content fingerprint alone is a property of the INPUT
-    // (total rows + global checksum), so a changed routing plan or
+    // metadata tier (below) and the content tier's input fingerprint —
+    // ADVICE r5 (medium): the content fingerprint alone is a property of
+    // the INPUT (total rows + global checksum), so a changed routing plan or
     // partitions argument over unchanged input used to match the content
     // tier, skip the rewrite, and stamp the NEW plan's metadata fingerprint
     // onto output written by the OLD plan — every later run then served
-    // stale output through the zero-scan tier. The written plan's
-    // canonicalized semantic hash covers the routing and projection, the
-    // exchange width and the sort order.
-    val planFp = toWrite.queryExecution.analyzed.semanticHash().toLong
+    // stale output through the zero-scan tier.
+    val planFp = planFingerprint(toWrite.queryExecution.analyzed, partitions)
     val metaFp = {
       val hconf = routed.sparkSession.sparkContext.hadoopConfiguration
       // covers the PIPELINE as well as the input: the plan fingerprint is
@@ -240,61 +305,60 @@ object Route {
     }
     // in-memory inputs (no backing files) all hash alike — the metadata tier
     // is only meaningful for file-backed plans; others go straight to the
-    // content tier
-    if (inputFiles.nonEmpty && Files.exists(manifestPath)) {
-      val existing = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (existing.contains(s""""input_files":$metaFp,"""))
-        storedRows(existing) match {
-          case Some(rows) => return Lineage(existing, rows) // resume: no scan at all
-          case None => // unreadable manifest: recompute below
-        }
-    }
+    // content tier. A manifest whose input fingerprint is malformed is not
+    // served.
+    if (inputFiles.nonEmpty)
+      stored.filter(m => longAt(m, "input_files").contains(metaFp)).flatMap(storedInput) match {
+        case Some((_, rows, _)) => return Lineage(json.writeValueAsString(stored.get), rows)
+        case None =>
+      }
     // ONE stats pass: per-(sink, bucket) rows/checksum/min/max, collected as
-    // a bounded (sinks × day-buckets) result. The global input fingerprint
-    // folds out of the same rows — bit_xor is associative, so the xor of the
-    // per-group checksums IS the whole-input checksum. Total input scans: 2
-    // (this aggregate + the write), down from 3 — and 0 on a same-files
-    // rerun via the metadata tier above.
-    val groups = routed
-      .groupBy(col("sink"), dayBucket.as("bucket"))
-      .agg(
-        count(lit(1)).as("rows"),
-        coalesce(expr("bit_xor(xxhash64(conv_id, turn_idx, text))"), lit(0L)).as("checksum"),
-        min(col("turn_idx")).as("min_turn"),
-        max(col("turn_idx")).as("max_turn"))
-      .collect()
-    val totalRows = groups.map(_.getLong(2)).sum
-    val totalChecksum = groups.map(_.getLong(3)).foldLeft(0L)(_ ^ _)
-    val fpJson = s"""{"plan":$planFp,"rows":$totalRows,"checksum":$totalChecksum}"""
+    // a bounded (sinks × day-buckets) result, plus the requested first turns.
+    // The global input fingerprint folds out of the same rows — bit_xor is
+    // associative, so the xor of the per-group checksums IS the whole-input
+    // checksum. Total input scans: 2 (this aggregate + the write) — and 0 on
+    // a same-files rerun via the metadata tier above.
+    val stats = groupStats(routed, firstTurnsOf).collect()
+    val groups = stats.filterNot(_.getAs[Boolean]("per_conv"))
+      .sortBy(r => (r.getAs[String]("sink"), r.getAs[String]("bucket")))
+    val perConv = firstTurnsOf.map(_ => firstTurns(stats))
+    val totalRows = groups.map(_.getAs[Long]("rows")).sum
+    val totalChecksum = groups.map(_.getAs[Long]("checksum")).foldLeft(0L)(_ ^ _)
 
-    if (Files.exists(manifestPath)) {
-      val existing = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (existing.contains(s""""input":$fpJson""")) {
+    stored.filter(m => storedInput(m).contains((planFp, totalRows, totalChecksum))) match {
+      case Some(m) =>
         // same CONTENT under different file metadata: the written data is
         // valid — skip the write and refresh the metadata fingerprint so
         // the next rerun takes the zero-scan tier
-        val refreshed =
-          if (existing.contains("\"input_files\":"))
-            existing.replaceFirst("\"input_files\":-?\\d+,", s""""input_files":$metaFp,""")
-          else existing.replaceFirst("\\{", s"""{"input_files":$metaFp,""")
-        Files.write(manifestPath, refreshed.getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-        return Lineage(refreshed, totalRows)
-      }
+        return Lineage(write(manifestPath, m.put("input_files", metaFp)), totalRows, perConv)
+      case None =>
     }
 
+    // a write that dies part-way must not leave the old manifest beside it
+    Files.deleteIfExists(manifestPath)
     toWrite.write.mode(SaveMode.Overwrite)
       .partitionBy(fanOutPartitionCols: _*)
       .parquet(outDir + "/data")
 
-    val perPartition = groups
-      .map(r => s"""{"sink":"${r.getString(0)}","bucket":"${r.getString(1)}","rows":${r.getLong(2)},"checksum":${r.getLong(3)},"min_turn":${r.getInt(4)},"max_turn":${r.getInt(5)}}""")
-      .sorted
-      .mkString("[", ",", "]")
-    val manifest = s"""{"input_files":$metaFp,"input":$fpJson,"partitions":$perPartition}"""
-    Files.createDirectories(manifestPath.getParent)
-    Files.write(manifestPath, manifest.getBytes(StandardCharsets.UTF_8),
+    val manifest = json.createObjectNode().put("input_files", metaFp)
+    manifest.putObject("input")
+      .put("plan", planFp).put("rows", totalRows).put("checksum", totalChecksum)
+    val entries = manifest.putArray("partitions")
+    groups.foreach { r =>
+      entries.addObject()
+        .put("sink", r.getAs[String]("sink")).put("bucket", r.getAs[String]("bucket"))
+        .put("rows", r.getAs[Long]("rows")).put("checksum", r.getAs[Long]("checksum"))
+        .put("min_turn", r.getAs[Int]("min_turn")).put("max_turn", r.getAs[Int]("max_turn"))
+    }
+    Lineage(write(manifestPath, manifest), totalRows, perConv)
+  }
+
+  /** writes a manifest, returning its JSON text */
+  private def write(path: java.nio.file.Path, manifest: ObjectNode): String = {
+    val text = json.writeValueAsString(manifest)
+    Files.createDirectories(path.getParent)
+    Files.write(path, text.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Lineage(manifest, totalRows)
+    text
   }
 }

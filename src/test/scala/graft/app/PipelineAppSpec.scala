@@ -128,7 +128,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     assert(unordered.size == 0, s"${unordered.size} of ${files.size} files out of order")
   }
 
-  test("one Pipeline.run launches at most 16 jobs and reads at most 8x its input records") {
+  test("one Pipeline.run launches at most 12 jobs and reads at most 6x its input records") {
     // a guard against a pass creeping back: each extra action over the
     // parsed table costs a job and a full read of the input
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -147,8 +147,43 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       TestBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     val inputRecords = 6000L // sf0.001 transcripts
-    assert(jobs.get <= 16, s"${jobs.get} jobs")
-    assert(records.get <= 8 * inputRecords, s"${records.get} records read")
+    assert(jobs.get <= 12, s"${jobs.get} jobs")
+    assert(records.get <= 6 * inputRecords, s"${records.get} records read")
+  }
+
+  test("metrics sink: a conversation with two domains gets a row per domain, ids by first sight") {
+    import graft.operators.{Enrich, Sinks}
+    import spark.implicits._
+    // generated conversations keep one vhost domain; here every third
+    // conversation's odd turns carry a second one (a vhost line swaps its
+    // domain, any other line with a trailing quoted field gains one)
+    val second = "second.example.com"
+    val turns = Tables.localTurns(2000).map { t =>
+      val (c, rest) = t.text.span(_ != ' ')
+      val text =
+        if (t.conv_id.takeRight(1).toInt % 3 != 0 || t.turn_idx % 2 == 0) t.text
+        else if (graft.sources.TranscriptGen.domainPool.contains(c)) second + rest
+        else if (t.text.endsWith("\"")) s"$second ${t.text}"
+        else t.text
+      t.copy(text = text)
+    }
+    val table = "two-domain-local"
+    spark.createDataset(turns).write.mode("overwrite").parquet(Tables.transcriptsPath(table))
+    val out = java.nio.file.Files.createTempDirectory("graft-two-domains").toString
+    Pipeline.run(spark, table, out)
+    val cols = Seq("domain_id", "conv_id", "metric_type", "key_value", "time_window", "metric_value")
+    val written = spark.read.parquet(s"$out/metrics").select(cols.map(col): _*)
+      .collect().map(_.toSeq).toSeq
+
+    val parsed = ParseStage.parse(Tables.transcripts(spark, table))
+    val joined = Enrich.withDomainId(parsed).select("conv_id", "domain_id").distinct()
+    val twoDomainConvs = joined.groupBy("conv_id").count().filter(col("count") > 1).count()
+    assert(twoDomainConvs > 10, s"$twoDomainConvs conversations with two domains")
+    val expected = Sinks.withDomainRows(Aggregates.metricRows(parsed), joined)
+      .collect().map(_.toSeq).toSeq
+    assert(written.size > Aggregates.metricRows(parsed).count()) // rows repeat per domain
+    def counts(rows: Seq[Seq[Any]]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(counts(written) == counts(expected))
   }
 
   test("JobConfig JSON loader") {

@@ -222,6 +222,65 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(Route.fanOutWithLineage(routed, dir, partitions = 8) == first)
   }
 
+  test("a manifest whose input fingerprint is malformed is recomputed, not served") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-bad-input").toString
+    val routed = Route.withSink(ParseStage.parse(
+      graft.sources.Tables.transcripts(spark, "sf0.001")))
+    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    // the metadata fingerprint still matches and "rows" still reads; the
+    // checksum does not
+    val bad = first.manifest.replaceFirst("(\"input\":\\{[^}]*\"checksum\":)-?\\d+", "$1\"x\"")
+    assert(bad != first.manifest)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_lineage", "manifest.json"), bad)
+    assert(Route.fanOutWithLineage(routed, dir, partitions = 8) == first)
+  }
+
+  test("no manifest exists while the fan-out rewrites routed/data") {
+    // a process killed at any point of the write must find nothing to
+    // resume from: the old manifest would vouch for half-written data
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-rewrite").toString
+    val routed = Route.withSink(ParseStage.parse(
+      graft.sources.Tables.transcripts(spark, "sf0.001")))
+    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val manifest = s"$dir/_lineage/manifest.json"
+    // a changed plan, so the call rewrites; the probe runs in the write's
+    // tasks only (the stats pass does not read the column)
+    val seen = spark.sparkContext.longAccumulator("manifest seen during the write")
+    val probe = udf { (_: String) =>
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(manifest))) seen.add(1)
+      0
+    }
+    val second = Route.fanOutWithLineage(routed.withColumn("probe", probe(col("text"))), dir, partitions = 8)
+    assert(second.rows == first.rows && second.manifest != first.manifest)
+    assert(seen.value == 0, s"the manifest existed for ${seen.value} written rows")
+  }
+
+  test("a rerun in a fresh JVM resumes the fan-out: no job, routed/data untouched") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-jvm").toString
+    Route.fanOutWithLineage(Route.withSink(ParseStage.parse(
+      graft.sources.Tables.transcripts(spark, "sf0.001"))), dir, partitions = 8)
+    def files(): Map[String, (Long, Long)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+        f.toString -> (java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis)
+      }.toMap
+      finally walk.close()
+    }
+    val before = files()
+    // the same test classpath and JVM options, a smaller heap
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.operators.LineageRerun", "sf0.001", dir, "8")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val output = new String(proc.getInputStream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    assert(proc.waitFor() == 0, output.takeRight(4000))
+    assert(output.linesIterator.contains("jobs=0"), output.linesIterator.filter(_.startsWith("jobs=")).toList)
+    assert(files() == before)
+  }
+
   test("lineage fan-out reads the input at most twice (stats pass + write)") {
     val executed = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
