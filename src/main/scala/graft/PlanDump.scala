@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev utility: dump `.explain("formatted")` for every registered bench query
-  * (or a named subset) to plans/<tag>/<query>_<suffix>.txt — the judge-facing
-  * plan artifacts for the optimization rounds.
+/** The dev main: dump `.explain("formatted")` of every registered query (or
+  * a named subset) to plans/<tag>/<query>_<suffix>.txt, for the plan
+  * artifacts of optimization rounds. Each query runs first, through the
+  * QueryExecution it is explained from, so the dump shows the final adaptive
+  * plan; no rows reach the driver. Per-query times come from `Bench`, per
+  * layer times of `Pipeline.run` from `perfbench/`.
   *
   * `runMain graft.PlanDump <tag> <suffix> [sfDir] [name1,name2,...]`
   * e.g. `runMain graft.PlanDump r06 before /root/testdata/sf0.1`
@@ -19,36 +21,18 @@ object PlanDump {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = Paths.get(s"/root/repo/plans/$tag")
+    val spark = Session.local()
+    // Bench's scan splits, so these plans are the ones Bench times
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1m")
+    val dir = Paths.get("plans", tag)
     Files.createDirectories(dir)
-    val names = Seq(
-      "a2_keyed_counts", "a6_metric_rows", "f1_route_sinks", "j1_enrich",
-      "q1_agg", "q3_topn_join", "w_window_running", "e_rate_windows",
-      "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embedding",
-      "dedup_clusters", "dedup_incremental", "dedup_incr_prebanded",
-      "ann_topk", "ann_lsh", "ann_ivf", "ann_ivf_preassigned",
-      "text_langid", "text_quality", "text_tokens", "text_fingerprint",
-      "text_vocab", "sample_split", "mm_binary_meta", "mm_decode",
-      "mm_transform", "mm_features", "s6_conv_progress",
-      "a1_totals", "a3_totals_delta", "a4_topn_paths", "a7_windows",
-      "p_parse_fields", "r6_counter_report", "r3_metrics_sink")
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     names.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(FormattedMode)
-        Files.writeString(dir.resolve(s"${name}_$suffix.txt"), txt)
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        qe.toRdd.foreach(_ => ())
+        Files.writeString(dir.resolve(s"${name}_$suffix.txt"), qe.explainString(FormattedMode))
         println(s"[plandump] wrote $name ($suffix)")
       } catch {
         case e: Throwable => System.err.println(s"[plandump] $name failed: $e")

@@ -1,5 +1,8 @@
 package graft.app
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,23 +28,31 @@ final case class JobConfig(
     arrivalOrderMetrics: Boolean = false) // exact A8 semantics vs batch sums
 
 object JobConfig {
-  /** tiny flat-JSON loader (no external deps): {"key": value, ...}.
-    * Fields absent from the JSON fall back to `base` — the per-field
-    * presence semantics the reference tracks via its `*_ok` flags
-    * (main.go:405-475): present-but-empty stays empty, absent inherits.
+  private[app] val mapper = new ObjectMapper()
+
+  /** A flat JSON object {"key": value, ...}. Fields absent (or null) in the
+    * JSON fall back to `base` — the per-field presence semantics the
+    * reference tracks via its `*_ok` flags (main.go:405-475): present-but-empty
+    * stays empty, absent inherits. A value of the wrong type, or an integer
+    * outside 32 bits, is rejected with its key's name.
     */
-  def fromJson(json: String, base: JobConfig = JobConfig()): JobConfig = {
-    def str(k: String): Option[String] =
-      ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json).map(_.group(1))
-    def num(k: String): Option[Int] =
-      ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json).map(_.group(1).toInt)
-    def bool(k: String): Option[Boolean] =
-      ("\"" + k + "\"\\s*:\\s*(true|false)").r.findFirstMatchIn(json).map(_.group(1).toBoolean)
-    def arr(k: String): Option[Seq[String]] =
-      ("\"" + k + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq)
+  def fromJson(json: String, base: JobConfig = JobConfig()): JobConfig =
+    fromNode(mapper.readTree(json), base)
+
+  private[app] def fromNode(o: JsonNode, base: JobConfig): JobConfig = {
+    require(o.isObject, s"a config is a JSON object, not: $o")
+    def field[T](k: String, what: String, ok: JsonNode => Boolean, get: JsonNode => T): Option[T] =
+      Option(o.get(k)).filterNot(_.isNull).map { v =>
+        require(ok(v), s"config key $k: $v is not $what")
+        get(v)
+      }
+    def str(k: String) = field(k, "a string", _.isTextual, _.textValue)
+    def num(k: String) = field(k, "a 32-bit integer", v => v.isIntegralNumber && v.canConvertToInt, _.intValue)
+    def bool(k: String) = field(k, "a boolean", _.isBoolean, _.booleanValue)
+    def strs(k: String) = field(k, "an array of strings",
+      v => v.isArray && v.elements.asScala.forall(_.isTextual), _.elements.asScala.map(_.textValue).toSeq)
     JobConfig(
-      handlers = arr("Handlers").getOrElse(base.handlers),
+      handlers = strs("Handlers").getOrElse(base.handlers),
       domainName = str("DomainName").getOrElse(base.domainName),
       hostId = num("HostId").getOrElse(base.hostId),
       timeWindowSizeMinutes = num("TimeWindowSizeMinutes").getOrElse(base.timeWindowSizeMinutes),
@@ -66,62 +77,21 @@ object MultiJobConfig {
   val DefaultKey = "--default--"
   val OsMetricsKey = "--OS-metrics--"
 
-  /** split a top-level JSON object into (key, rawValue) pairs — a tiny
-    * depth/string-aware scanner, no external JSON dependency
-    */
-  private[app] def topLevelEntries(json: String): Seq[(String, String)] = {
-    val out = Seq.newBuilder[(String, String)]
-    var i = json.indexOf('{') + 1
-    def skipWs(): Unit = while (i < json.length && json.charAt(i).isWhitespace) i += 1
-    def readString(): String = { // at opening quote
-      val sb = new StringBuilder
-      i += 1
-      while (i < json.length && json.charAt(i) != '"') {
-        if (json.charAt(i) == '\\' && i + 1 < json.length) { sb.append(json.charAt(i + 1)); i += 2 }
-        else { sb.append(json.charAt(i)); i += 1 }
-      }
-      i += 1
-      sb.toString
-    }
-    if (i == 0) return Seq.empty
-    while (i < json.length) {
-      skipWs()
-      if (i >= json.length || json.charAt(i) == '}') return out.result()
-      if (json.charAt(i) == ',') { i += 1 }
-      else if (json.charAt(i) == '"') {
-        val key = readString()
-        skipWs()
-        if (i < json.length && json.charAt(i) == ':') i += 1
-        skipWs()
-        val start = i
-        var depth = 0
-        var done = false
-        while (i < json.length && !done) {
-          json.charAt(i) match {
-            case '"' => readString(); i -= 1
-            case '{' | '[' => depth += 1
-            case '}' | ']' =>
-              if (depth == 0) done = true else depth -= 1
-            case ',' if depth == 0 => done = true
-            case _ =>
-          }
-          if (!done) i += 1
-        }
-        out += ((key, json.substring(start, i)))
-      } else i += 1
-    }
-    out.result()
+  /** the top-level (key, value) pairs, in declaration order */
+  private def entries(json: String): Seq[(String, JsonNode)] = {
+    val root = JobConfig.mapper.readTree(json)
+    if (root.isObject) root.properties.asScala.toList.map(e => e.getKey -> e.getValue) else Nil
   }
+
+  private def default(entries: Seq[(String, JsonNode)]): JobConfig =
+    entries.collectFirst { case (DefaultKey, body) => JobConfig.fromNode(body, JobConfig()) }
+      .getOrElse(JobConfig())
 
   /** source dir → merged config (default-filled), in declaration order */
   def fromJson(json: String): Seq[(String, JobConfig)] = {
-    val entries = topLevelEntries(json)
-    val default = entries.collectFirst { case (DefaultKey, body) => JobConfig.fromJson(body) }
-      .getOrElse(JobConfig())
-    entries.collect {
-      case (k, body) if k != DefaultKey && k != OsMetricsKey =>
-        k -> JobConfig.fromJson(body, default)
-    }
+    val all = entries(json)
+    val base = default(all)
+    all.collect { case (k, body) if k != DefaultKey && k != OsMetricsKey => k -> JobConfig.fromNode(body, base) }
   }
 
   /** the `--OS-metrics--` sampler config (main.go:545-570): not a source —
@@ -129,10 +99,8 @@ object MultiJobConfig {
     * to the job-metrics emission. Default-merged like any source entry.
     */
   def osMetricsConfig(json: String): Option[JobConfig] = {
-    val entries = topLevelEntries(json)
-    val default = entries.collectFirst { case (DefaultKey, body) => JobConfig.fromJson(body) }
-      .getOrElse(JobConfig())
-    entries.collectFirst { case (OsMetricsKey, body) => JobConfig.fromJson(body, default) }
+    val all = entries(json)
+    all.collectFirst { case (OsMetricsKey, body) => JobConfig.fromNode(body, default(all)) }
   }
 
   /** A config is the multi-source map iff every top-level value is itself an
@@ -142,8 +110,8 @@ object MultiJobConfig {
     * --default-- entry is still a valid map, main.go:405-475).
     */
   def isMultiSource(json: String): Boolean = {
-    val entries = topLevelEntries(json)
-    entries.nonEmpty && entries.forall(_._2.trim.startsWith("{"))
+    val all = entries(json)
+    all.nonEmpty && all.forall(_._2.isObject)
   }
 }
 
@@ -247,14 +215,7 @@ object Pipeline {
     val multi = rawCfg.filter(MultiJobConfig.isMultiSource)
     val cfg = if (multi.isEmpty) rawCfg.map(JobConfig.fromJson(_)).getOrElse(JobConfig())
     else JobConfig()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     multi match {
       case Some(json) =>
         val osCfg = MultiJobConfig.osMetricsConfig(json)

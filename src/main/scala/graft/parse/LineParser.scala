@@ -434,8 +434,8 @@ object LineParser {
     * (pool lines + adversarial fuzz).
     *
     * Why: java.util.regex `matches()` with 9-12 capture groups dominated
-    * per-line cost (measured in ParseProfile); the scan replaces it with one
-    * branchy pass and eight substrings.
+    * per-line cost (single-threaded profile, BENCH.md round 6); the scan
+    * replaces it with one branchy pass and eight substrings.
     *
     * @return the ParsedFields on a decided clean-shape match, null = bail
     */

@@ -4,12 +4,35 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{ParseStage, Route}
+import graft.sources.Tables
 
 /** Driver-contract smoke + R2 JSON sink parity. */
 class AppSpec extends AnyFunSuite with SparkTestBase {
 
   test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
+    // one row per routing sink, summing to the parsed sf0.001 turns (the
+    // transcripts table is keyed by the scale's name alone)
+    val rows = SparkEntry.entry(spark).collect()
+    assert(rows.map(_.getString(0)).sorted.toSeq == Route.rules.map(_._1).sorted)
+    val parsed = ParseStage.parse(Tables.transcripts(spark, "sf0.001")).count()
+    assert(parsed > 0 && rows.map(_.getLong(1)).sum == parsed)
+  }
+
+  test("Session leaves a launcher's spark.master and settings alone") {
+    assert(Session.conf(3).get("spark.master") == "local[3]")
+    assert(Session.conf(3).get("spark.sql.shuffle.partitions") == "3")
+    System.setProperty("spark.master", "spark://cluster:7077")
+    System.setProperty("spark.sql.shuffle.partitions", "200")
+    try {
+      val conf = Session.conf(3)
+      assert(conf.get("spark.master") == "spark://cluster:7077")
+      assert(conf.get("spark.sql.shuffle.partitions") == "200")
+      assert(!conf.contains("spark.driver.host")) // executors must reach a cluster's driver
+      assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    } finally {
+      System.clearProperty("spark.master")
+      System.clearProperty("spark.sql.shuffle.partitions")
+    }
   }
 
   test("every oracleSql key exists in queries") {

@@ -8,12 +8,9 @@ trait SparkTestBase {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.host", "localhost")
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = Session.local(4)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
+  }
 }

@@ -198,6 +198,17 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     assert(cfg.replaceExistingMetrics) // default preserved
   }
 
+  test("config JSON: escapes decode, and a bad value is rejected by its key") {
+    val cfg = JobConfig.fromJson("""{"DomainName": "a\"b", "Handlers": ["COUNTER"], "HostId": null}""")
+    assert(cfg.domainName == "a\"b" && cfg.handlers == Seq("COUNTER") && cfg.hostId == 0)
+    val src = MultiJobConfig.fromJson("{\"/logs/caf\\u00e9\": {\"HostId\": 2}}")
+    assert(src.map(_._1) == Seq("/logs/caf\u00e9"))
+    val big = intercept[IllegalArgumentException](JobConfig.fromJson("""{"HostId": 99999999999}"""))
+    assert(big.getMessage.contains("HostId"), big.getMessage)
+    val typed = intercept[IllegalArgumentException](JobConfig.fromJson("""{"StartFrom": "5"}"""))
+    assert(typed.getMessage.contains("StartFrom"), typed.getMessage)
+  }
+
   test("counter report deltas between two snapshots (A3)") {
     import spark.implicits._
     val p1 = ParseStage.parse(spark.createDataset(Tables.localTurns(500)).toDF())
