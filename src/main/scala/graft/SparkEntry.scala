@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.app.OracleSql
 import graft.operators._
@@ -231,14 +232,17 @@ object SparkEntry {
 
     // R6: counter-report-shaped aggregate — per-dimension top-10 shrink
     // (A4/A5) via the two-stage bounded-heap aggregate + the six grand
-    // totals as a '_totals' dimension (counter.go:326-445)
+    // totals as a '_totals' dimension (counter.go:326-445). The 10
+    // smallest (-cnt, key): cnt descending, then key ascending with the null
+    // key first, in UTF-8 byte order
     "r6_counter_report" -> ((s, d) => {
       val p = parsed(s, d)
       val topPerDim = Aggregates.keyedCounts(p)
         .groupBy(col("dim"))
-        .agg(TopK.topKeyCounts(10)(col("key"), col("cnt")).as("top"))
+        .agg(Bridge.collectTopK(struct((-col("cnt")).as("neg_cnt"), col("key")), 10,
+          smallest = true).as("top"))
         .select(col("dim"), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col("dim"), col("e.key").as("key"), col("e.cnt").as("cnt"),
+        .select(col("dim"), col("e.key").as("key"), (-col("e.neg_cnt")).as("cnt"),
           (col("pos") + 1).cast("int").as("rank"))
       val totalNames = Seq("handled_entries", "total_requests", "total_bytes",
         "humans", "non_humans", "malicious_requests")

@@ -59,11 +59,6 @@ object Dedup {
       (col("doc_id") > min(col("doc_id")).over(w)).cast("int").as("is_dup"))
   }
 
-  /** Exact dedup groups: one row per distinct text with count and keeper. */
-  def exactGroups(docs: DataFrame): DataFrame =
-    docs.groupBy(xxhash64(col("text")).as("text_hash"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))
-
   // -------------------------------------------------------------- minhash
   /** deterministic 64-bit string hash (FNV-1a) shared by tests */
   def fnv1a(s: String): Long = fnv1aRange(s, 0, s.length)

@@ -23,8 +23,6 @@ import graft.parse.LineParser
   */
 object ParseStage {
 
-  val provenanceCols: Seq[String] = Seq("conv_id", "turn_idx", "role", "tool", "ts", "text")
-
   /** transcripts(conv_id, turn_idx, role, text, tool, ts) → flat parsed DF.
     * Unparseable lines are dropped (the reference counts them as errors and
     * emits nothing, main.go:753-756 / :789).
@@ -35,32 +33,29 @@ object ParseStage {
     * RefOracle.parseConv(quirk = true). Default emits it (documented
     * divergence, SURVEY.md §2 P1).
     */
-  def parse(transcripts: DataFrame, keepText: Boolean = true, quirk: Boolean = false): DataFrame = {
+  def parse(transcripts: DataFrame, quirk: Boolean = false): DataFrame = {
     val spark = transcripts.sparkSession
     import spark.implicits._
     val flat = transcripts
-      .select(provenanceCols.head, provenanceCols.tail: _*)
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"))
       .as[TranscriptTurn]
       .mapPartitions(_.flatMap(t => LineParser.parseAuto(t.text).map(p => ParsedTurn(t, p))))
       .toDF()
-    val quirked =
-      if (!quirk) flat
-      else {
-        // detection line = min parsed turn_idx per conversation (parse order
-        // IS turn order). A conv-partitioned window — scale-safe, one shuffle.
-        // Alternatives considered (VERDICT r4 item 8) and rejected: a
-        // secondary-sort mapPartitions costs the same full-row exchange +
-        // sort this window plans; a tiny (conv, min) aggregate broadcast
-        // back would avoid the full-row shuffle but the dim is #convs rows
-        // (~10⁸ at 10¹² turns) — far beyond broadcast. One full-row
-        // exchange is the floor for this semantics; this is it.
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("conv_id"))
-        flat.withColumn("_det", min(col("turn_idx")).over(w))
-          .filter(col("turn_idx") =!= col("_det"))
-          .drop("_det")
-      }
-    if (keepText) quirked else quirked.drop("text")
+    if (!quirk) flat
+    else {
+      // detection line = min parsed turn_idx per conversation (parse order
+      // IS turn order). A conv-partitioned window — scale-safe, one shuffle.
+      // Alternatives considered (VERDICT r4 item 8) and rejected: a
+      // secondary-sort mapPartitions costs the same full-row exchange +
+      // sort this window plans; a tiny (conv, min) aggregate broadcast
+      // back would avoid the full-row shuffle but the dim is #convs rows
+      // (~10⁸ at 10¹² turns) — far beyond broadcast. One full-row
+      // exchange is the floor for this semantics; this is it.
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("conv_id"))
+      flat.withColumn("_det", min(col("turn_idx")).over(w))
+        .filter(col("turn_idx") =!= col("_det"))
+        .drop("_det")
+    }
   }
 
   /** Instant shifted by its own UTC offset: formatting the result in a UTC

@@ -51,14 +51,13 @@ object Route {
   def withSink(parsed: DataFrame): DataFrame = parsed.withColumn("sink", sinkCol)
 
   /** Salted exchange + in-partition stable order (north rule). The salt only
-    * spreads rows of one conversation across SALT tasks; aggregates are
+    * spreads rows of one conversation across 16 tasks; aggregates are
     * salt-insensitive because keys re-merge in their own final aggregation.
     * Rows are sorted by `sortPrefix`, then (conv_id, turn_idx).
     */
-  def salted(parsed: DataFrame, partitions: Int, salt: Int = 16,
-      sortPrefix: Seq[String] = Nil): DataFrame =
+  def salted(parsed: DataFrame, partitions: Int, sortPrefix: Seq[String] = Nil): DataFrame =
     parsed
-      .withColumn("_salt", pmod(hash(col("turn_idx")), lit(salt)))
+      .withColumn("_salt", pmod(hash(col("turn_idx")), lit(16)))
       .repartition(partitions, col("conv_id"), col("_salt"))
       .sortWithinPartitions((sortPrefix ++ Seq("conv_id", "turn_idx")).map(col): _*)
       .drop("_salt")

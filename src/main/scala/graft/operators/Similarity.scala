@@ -2,14 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge.collectTopK
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * - bruteTopK: exact baseline — broadcast the (small) query set against the
-  *   corpus, one scoring pass, then a TWO-STAGE top-k: per-partition bounded
-  *   heaps (TopK.topCands, a partial ObjectHashAggregate) reduce each
-  *   partition to ≤k rows per query before the exchange, the final stage
-  *   merges. No single task ever holds all scored (query, candidate) rows.
+  *   corpus, one scoring pass, then a TWO-STAGE top-k: Spark's
+  *   `collect_top_k` (Bridge.collectTopK, a bounded priority queue planned
+  *   as a partial ObjectHashAggregate) reduces each partition to ≤k rows per
+  *   query before the exchange, the final stage merges. No single task ever
+  *   holds all scored (query, candidate) rows. `row_number() <= k` plans a
+  *   WindowGroupLimit instead, which sorts every scored row: 4-6× slower.
   * - lshTopK: the scale path — random-hyperplane signatures bucket the
   *   corpus; queries probe their own buckets, so each query scores only a
   *   fraction of the corpus. Candidate dedup across tables runs on ID PAIRS
@@ -42,11 +45,6 @@ object Similarity {
         }
       })
 
-  def hyperplaneSig(v: Seq[Float], planes: Int, table: Int): Int = {
-    val arr = v.toArray
-    hyperplaneSigArr(arr, planeSigns(planes, 1 + table, arr.length), planes, table)
-  }
-
   private def hyperplaneSigArr(v: Array[Float], signs: Array[Array[Double]],
       planes: Int, table: Int): Int = {
     var sig = 0
@@ -77,17 +75,18 @@ object Similarity {
 
   /** final top-k over scored (query_id, neighbor_id, cosine) rows via the
     * two-stage bounded-heap aggregate; emits (query_id, rank, neighbor_id,
-    * cosine) sorted best-first per query
+    * cosine) sorted best-first per query: cosine descending (NaN first, as
+    * Spark orders doubles), then neighbor_id ascending
     */
   def topK(scored: DataFrame, k: Int): DataFrame =
     scored
       .groupBy(col("query_id"))
-      .agg(TopK.topCands(k)(col("neighbor_id"), col("cosine")).as("top"))
+      .agg(collectTopK(struct(col("cosine"), (-col("neighbor_id")).as("neg_id")), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "n")))
       .select(
         col("query_id"),
         (col("pos") + 1).cast("int").as("rank"),
-        col("n.neighbor_id").as("neighbor_id"),
+        (-col("n.neg_id")).as("neighbor_id"),
         col("n.cosine").as("cosine"))
 
   /** Should the query side be broadcast against

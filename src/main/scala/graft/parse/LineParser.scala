@@ -47,42 +47,36 @@ object LineParser {
   private val reSqlInj = Pattern.compile("'.*(insert|update|exec|execute)")
 
   // Go layout "02/Jan/2006:15:04:05 -0700" — httpservers.go:322/:332.
-  // Go time.Parse matches month names byte-wise case-insensitively
-  // ("10/OCT/2000:…" parses), so the formatter is case-insensitive and the
-  // fast path folds the month key before lookup.
+  // Go time.Parse matches month names byte-wise, case-insensitively and
+  // ASCII only ("10/OCT/2000:…" parses, "10/ſep/2000:…" does not), so the
+  // formatter is case-insensitive behind an ASCII guard and the fast path
+  // folds the month key only after rejecting non-ASCII characters.
   private val tsFormat = new java.time.format.DateTimeFormatterBuilder()
     .parseCaseInsensitive()
     .appendPattern("dd/MMM/uuuu:HH:mm:ss Z")
     .toFormatter(Locale.ENGLISH)
     .withResolverStyle(ResolverStyle.STRICT)
 
-  private val monthIdx: java.util.Map[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-      .zipWithIndex.foreach { case (n, i) => m.put(n, i + 1) }
-    m
+  /** every char is ASCII: the Go layout is, so a timestamp with any other
+    * char cannot parse (Java's case folding would map e.g. 'ſ' to 'S')
+    */
+  private def isAscii(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) { if (s.charAt(i) >= 0x80) return false; i += 1 }
+    true
   }
 
-  /** ASCII case-fold to the canonical Jan/Feb/... key (Go folds per byte) */
-  private def monthKey(s: String, from: Int): String = {
-    val c0 = Character.toUpperCase(s.charAt(from))
-    val c1 = Character.toLowerCase(s.charAt(from + 1))
-    val c2 = Character.toLowerCase(s.charAt(from + 2))
-    new String(Array(c0, c1, c2))
-  }
-
-  /** allocation-free month lookup: same ASCII case-fold + table as
-    * monthKey/monthIdx (value-equivalence pinned in LineParserSpec), returns
+  /** allocation-free month lookup with Go's ASCII-only case fold, returns
     * 1-12 or -1
     */
   private def monthNum(s: String, from: Int): Int = {
+    // a non-ASCII char never matches a month name in Go, though Java's
+    // toUpperCase folds 'ſ' (U+017F) to 'S'; packed, chars >= 0x80 would
+    // also OR across byte lanes and could alias a valid month
+    if ((s.charAt(from) | s.charAt(from + 1) | s.charAt(from + 2)) >= 0x80) return -1
     val c0 = Character.toUpperCase(s.charAt(from))
     val c1 = Character.toLowerCase(s.charAt(from + 1))
     val c2 = Character.toLowerCase(s.charAt(from + 2))
-    // chars >= 0x80 would OR across byte lanes and can alias a valid month
-    // (e.g. 'H', U+0261, 'n' packs to the 'Jan' value — code-review r6);
-    // no month name has non-ASCII chars, so reject before packing
-    if (c0 >= 0x80 || c1 >= 0x80 || c2 >= 0x80) return -1
     ((c0 << 16) | (c1 << 8) | c2) match {
       case 0x4A616E => 1  // Jan
       case 0x466562 => 2  // Feb
@@ -102,35 +96,14 @@ object LineParser {
 
   private def dig(c: Char): Int = if (c >= '0' && c <= '9') c - '0' else -1000
 
-  /** Fast path for the exact 26-char layout (hand-rolled: ~10x faster than
-    * DateTimeFormatter, which dominates per-line parse cost); anything that
-    * deviates falls back to the strict formatter so semantics are unchanged.
+  /** The strict formatter behind the ASCII guard, with no fast path: the
+    * independent reference tsEpochOff's packed fast path is tested against.
     */
-  def parseTimestamp(s: String): Option[OffsetDateTime] = {
-    if (s.length == 26 && s.charAt(2) == '/' && s.charAt(6) == '/' &&
-      s.charAt(11) == ':' && s.charAt(14) == ':' && s.charAt(17) == ':' &&
-      s.charAt(20) == ' ' && (s.charAt(21) == '+' || s.charAt(21) == '-')) {
-      val day = dig(s.charAt(0)) * 10 + dig(s.charAt(1))
-      val mon = monthIdx.get(monthKey(s, 3))
-      val year = dig(s.charAt(7)) * 1000 + dig(s.charAt(8)) * 100 + dig(s.charAt(9)) * 10 + dig(s.charAt(10))
-      val hh = dig(s.charAt(12)) * 10 + dig(s.charAt(13))
-      val mm = dig(s.charAt(15)) * 10 + dig(s.charAt(16))
-      val ss = dig(s.charAt(18)) * 10 + dig(s.charAt(19))
-      val offH = dig(s.charAt(22)) * 10 + dig(s.charAt(23))
-      val offM = dig(s.charAt(24)) * 10 + dig(s.charAt(25))
-      if (mon != null && day >= 1 && year >= 0 && hh >= 0 && hh <= 23 &&
-        mm >= 0 && mm <= 59 && ss >= 0 && ss <= 59 && offH >= 0 && offM >= 0 && offM <= 59) {
-        try {
-          val sign = if (s.charAt(21) == '-') -1 else 1
-          val off = java.time.ZoneOffset.ofTotalSeconds(sign * (offH * 3600 + offM * 60))
-          // LocalDate.of validates day-of-month per month like Go time.Parse
-          return Some(OffsetDateTime.of(year, mon, day, hh, mm, ss, 0, off))
-        } catch { case _: Exception => return None }
-      }
-    }
-    try Some(OffsetDateTime.parse(s, tsFormat))
-    catch { case _: Exception => None }
-  }
+  def parseTimestamp(s: String): Option[OffsetDateTime] =
+    if (!isAscii(s)) None
+    else
+      try Some(OffsetDateTime.parse(s, tsFormat))
+      catch { case _: Exception => None }
 
   /** "no timestamp" sentinel for the packed (epochSec, offset) encoding */
   private[parse] val TsNone: Long = Long.MinValue
@@ -159,11 +132,10 @@ object LineParser {
     * packs (epochSeconds, offsetSeconds) into one long as
     * epochSec * 131072 + (offset + 64800); TsNone = unparseable or out of
     * the packed range (years past about ±2.2 million). Semantics
-    * are exactly parseTimestamp's (same structural gate, same validation —
-    * day-of-month per month like LocalDate.of, |offset| <= 18h like
-    * ZoneOffset.ofTotalSeconds; anything structurally off falls back to the
-    * strict formatter). Value-equivalence is property-pinned in
-    * LineParserSpec.
+    * are exactly parseTimestamp's (the fast path validates like the strict
+    * formatter — day-of-month per month, |offset| <= 18h, ASCII month
+    * names; anything structurally off falls back to the formatter).
+    * Value-equivalence is property-pinned in ParseProps and LineParserSpec.
     */
   def tsEpochOff(s: String): Long = {
     if (s.length == 26 && s.charAt(2) == '/' && s.charAt(6) == '/' &&
@@ -179,9 +151,8 @@ object LineParser {
       val offM = dig(s.charAt(24)) * 10 + dig(s.charAt(25))
       if (mon > 0 && day >= 1 && year >= 0 && hh >= 0 && hh <= 23 &&
         mm >= 0 && mm <= 59 && ss >= 0 && ss <= 59 && offH >= 0 && offM >= 0 && offM <= 59) {
-        // the try/catch of the OffsetDateTime fast path, made explicit:
-        // LocalDate.of validates day-of-month; ZoneOffset.ofTotalSeconds
-        // rejects |offset| > 18h — both returned None there, None here
+        // the strict formatter rejects a day past the month's end and an
+        // offset past 18h
         if (day > daysInMonth(year, mon)) return TsNone
         val off = offH * 3600 + offM * 60
         if (off > 64800) return TsNone
@@ -191,10 +162,11 @@ object LineParser {
         return epochSec * 131072L + (signedOff + 64800L)
       }
     }
-    // structurally off the fast layout: the strict formatter decides, exactly
-    // like parseTimestamp's tail. Its signed years reach ±999,999,999, the
-    // packed form only about ±2.2 million: past that, TsNone (the overflow
-    // is an ArithmeticException)
+    // structurally off the fast layout: the strict formatter decides, behind
+    // the same ASCII guard as parseTimestamp. Its signed years reach
+    // ±999,999,999, the packed form only about ±2.2 million: past that,
+    // TsNone (the overflow is an ArithmeticException)
+    if (!isAscii(s)) return TsNone
     try {
       val o = OffsetDateTime.parse(s, tsFormat)
       Math.multiplyExact(o.toEpochSecond, 131072L) + (o.getOffset.getTotalSeconds + 64800L)
@@ -247,17 +219,6 @@ object LineParser {
       if (refererCache.size < 100000) refererCache.put(referer, norm)
       norm
     }
-  }
-
-  /** Kept as the spec-shaped entry point (and for tests); delegates to the
-    * same memoized pieces build() uses so the two cannot drift
-    * (code-review r6).
-    */
-  private[parse] def normalizeReferer(referer: String, requestUri: String): String = {
-    val utm = uriFields(requestUri).utm
-    if (utm != null) utm
-    else if (referer.nonEmpty) refererHostCached(referer)
-    else ""
   }
 
   /** All URI-derived fields (path split, malicious class, utm_source

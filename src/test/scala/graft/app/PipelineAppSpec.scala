@@ -22,7 +22,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val turns = Tables.localTurns(2000)
     val parsed = ParseStage.parse(spark.createDataset(turns).toDF())
-    val exact = MetricsArrivalOrder.metricRows(parsed, partitions = 8).collect()
+    val exact = MetricsArrivalOrder.metricRows(parsed).collect()
       .map(m => (m.conv_id, m.metric_type, Option(m.key_value), m.time_window) -> m.metric_value).toMap
     val batch = Aggregates.metricRows(parsed).collect()
       .map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)), r.getLong(3)) -> r.getLong(4)).toMap
@@ -42,7 +42,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       TranscriptTurn("adversarial-conv", i, "user", line(sec, "200"), "", new java.sql.Timestamp(sec * 1000))
     }
     val parsed = ParseStage.parse(spark.createDataset(turns).toDF())
-    val exact = MetricsArrivalOrder.metricRows(parsed, partitions = 4).collect()
+    val exact = MetricsArrivalOrder.metricRows(parsed).collect()
       .map(m => (m.metric_type, Option(m.key_value), m.time_window) -> m.metric_value).toMap
     val oracle = RefOracle.metricRows(turns)
       .map(m => (m.metric_type, Option(m.key_value), m.time_window) -> m.metric_value).toMap
@@ -52,6 +52,38 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getInt(1), Option(r.getString(2)), r.getLong(3)) -> r.getLong(4)).toMap
     assert(batch != oracle)
     assert(batch.values.sum > oracle.values.sum) // straggler dropped by reference semantics
+  }
+
+  test("Pipeline.run with ArrivalOrderMetrics writes the oracle's arrival-order metrics") {
+    import spark.implicits._
+    // per conversation, turn i lands in window i; turn 30 straggles 4
+    // windows back and turn 35 40 windows back: a 10-window state keeps the
+    // first and drops the second, a 2-window state drops both
+    val base = 1763337600L
+    def line(sec: Long, status: String) =
+      s"""1.2.3.4 - - [${graft.sources.TranscriptGen.renderTs(sec)}] "GET /a/b HTTP/1.1" $status 100 "-" "curl/8.5.0""""
+    val turns = for (c <- 0 until 3; i <- 0 until 40) yield {
+      val window = if (i == 30) 25 else if (i == 35) -5 else i
+      val sec = base + window * 600 + c
+      TranscriptTurn(s"straggler-$c", i, "user", line(sec, if (i % 7 == 0) "404" else "200"), "",
+        new java.sql.Timestamp(sec * 1000))
+    }
+    val table = "straggler-local"
+    spark.createDataset(turns).write.mode("overwrite").parquet(Tables.transcriptsPath(table))
+    def key(conv: String, mt: Int, k: String, tw: Long) = (conv, mt, Option(k), tw)
+    val sinks = Seq(2, 10).map { w =>
+      val out = java.nio.file.Files.createTempDirectory(s"graft-arrival-$w").toString
+      Pipeline.run(spark, table, out,
+        JobConfig(handlers = Seq("METRICS"), metricsWindowSize = w, arrivalOrderMetrics = true))
+      val written = spark.read.parquet(s"$out/metrics")
+        .select("conv_id", "metric_type", "key_value", "time_window", "metric_value").collect()
+        .map(r => key(r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)) -> r.getLong(4)).toMap
+      val oracle = RefOracle.metricRows(turns, metricsWindowSize = w)
+        .map(m => key(m.conv_id, m.metric_type, m.key_value, m.time_window) -> m.metric_value).toMap
+      assert(written == oracle, s"MetricsWindowSize $w")
+      written
+    }
+    assert(sinks(0) != sinks(1))
   }
 
   test("full pipeline run: sinks written, manifest idempotent, counter report formatted") {

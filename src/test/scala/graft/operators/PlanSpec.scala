@@ -195,6 +195,21 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       Seq(Seq("sink", "bucket", "conv_id", "turn_idx")), writePlans.peek().toString)
   }
 
+  test("a8: one exchange on conv_id, spark.sql.shuffle.partitions wide") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val qe = SparkEntry.queries("a8_arrival_metrics")(spark, sf).queryExecution
+    val exchanges = AqeHelper.collect(qe.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(exchanges.map(_.numPartitions) == Seq(width), qe.executedPlan.toString)
+    exchanges.foreach {
+      case h: HashPartitioning => assert(h.references.map(_.name).toSeq == Seq("conv_id"))
+      case other => fail(s"expected a hash exchange on conv_id, got $other")
+    }
+  }
+
   test("salted fan-out exchanges on (conv_id, salt) and sorts within partitions") {
     import org.apache.spark.sql.functions._
     val parsed = ParseStage.parse(graft.sources.Tables.transcripts(spark, sf)).limit(10)

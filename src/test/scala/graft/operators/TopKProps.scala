@@ -1,18 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Property-style pins for the hand-written bounded-heap partial top-k:
-  * against a plain sort-and-take oracle, under arbitrary partitioning,
-  * with duplicate scores, ties, and k larger than the group (seeded
-  * deterministic random inputs).
+/** Property-style pins for the bounded-heap partial top-k
+  * (`Bridge.collectTopK`, Spark's `collect_top_k`) and the orderings its
+  * callers encode as structs: against a plain sort-and-take oracle, under
+  * arbitrary partitioning, with duplicate scores, ties, and k larger than
+  * the group (seeded deterministic random inputs).
   */
 class TopKProps extends AnyFunSuite with SparkTestBase {
 
-  test("TopK.topCands == sort-take-k for random inputs, any partitioning") {
+  test("Similarity.topK == sort-take-k for random inputs, any partitioning") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     (1 to 8).foreach { trial =>
@@ -37,16 +39,17 @@ class TopKProps extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("TopK.topKeyCounts ranks like the window it replaced (nulls first on ties)") {
+  test("collectTopK over (-cnt, key): cnt descending, then key with nulls first") {
     import spark.implicits._
     val rows = Seq(
       ("d1", Some("b"), 5L), ("d1", None, 5L), ("d1", Some("a"), 5L), ("d1", Some("z"), 9L),
       ("d2", Some("x"), 1L))
     val df = rows.map { case (d, k, c) => (d, k.orNull, c) }.toDF("dim", "key", "cnt").repartition(5)
     val got = df.groupBy(col("dim"))
-      .agg(TopK.topKeyCounts(3)(col("key"), col("cnt")).as("top"))
+      .agg(Bridge.collectTopK(struct((-col("cnt")).as("neg_cnt"), col("key")), 3,
+        smallest = true).as("top"))
       .select(col("dim"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("dim"), col("e.key"), col("e.cnt"), (col("pos") + 1).as("rank"))
+      .select(col("dim"), col("e.key"), -col("e.neg_cnt"), (col("pos") + 1).as("rank"))
       .collect().map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2), r.getInt(3))).toSet
     assert(got == Set(
       ("d1", Some("z"), 9L, 1), ("d1", None, 5L, 2), ("d1", Some("a"), 5L, 3),

@@ -156,6 +156,18 @@ class LineParserSpec extends AnyFunSuite {
     assert(parseTimestamp("10/oCt/2000:13:55:36 -0700").nonEmpty)
   }
 
+  test("timestamp: a non-ASCII month name does not parse (Go folds case ASCII-only)") {
+    // 'ſ' (U+017F) uppercases to 'S' in Java, so a Unicode case fold reads
+    // Sep: on the packed fast path and in the formatter (a 5-digit year)
+    assert(parseTimestamp("10/Sep/+10000:13:55:36 +0000").nonEmpty)
+    for (ts <- Seq("10/ſep/2000:13:55:36 +0000", "10/ſep/+10000:13:55:36 +0000")) {
+      assert(tsEpochOff(ts) == TsNone, ts)
+      assert(parseTimestamp(ts).isEmpty, ts)
+    }
+    val line = """1.2.3.4 - - [10/ſep/2000:13:55:36 +0000] "GET / HTTP/1.1" 200 10 "-" "curl/8.5.0""""
+    assert(parseAuto(line).get.log_ts.isEmpty)
+  }
+
   test("robots.txt override applied through full parse") {
     val line = """1.2.3.4 - - [10/Oct/2000:13:55:36 +0000] "GET /robots.txt HTTP/1.1" 200 10 "-" "Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/136.0.0.0 Safari/537.36""""
     val p = parseAuto(line).get
