@@ -158,17 +158,11 @@ object Pipeline {
           MetricsArrivalOrder.metricRows(parsed, cfg.timeWindowSizeMinutes, cfg.metricsWindowSize).toDF()
         else Aggregates.metricRows(parsed, cfg.timeWindowSizeMinutes)
       // the domain dimension: the same ids as Enrich.withDomainId, numbered
-      // locally from each (conv_id, domain)'s first turn. A fan-out
-      // resumed without a scan found none, so the stats pass runs here.
-      // A match, not getOrElse: it keeps the collect's call site in this
-      // method, where perfbench's layer map attributes it.
-      val firstTurns = lineage.firstTurns match {
-        case Some(found) => found
-        case None => Route.firstTurns(Route.groupStats(routed, Some(domainName)).collect())
-      }
-      val ids = Enrich.firstSightIds(firstTurns).toMap
+      // locally from each (conv_id, domain)'s first turn, as the fan-out's
+      // stats pass found them
+      val ids = Enrich.firstSightIds(lineage.firstTurns).toMap
       import spark.implicits._
-      val domainDim = firstTurns.map { case (domain, conv, _) => (conv, ids(domain)) }
+      val domainDim = lineage.firstTurns.map { case (domain, conv, _) => (conv, ids(domain)) }
         .toDF("conv_id", "domain_id")
       Sinks.writeMetrics(metricRows, domainDim, s"$outDir/metrics", cfg.replaceExistingMetrics)
     }

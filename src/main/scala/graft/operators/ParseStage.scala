@@ -69,14 +69,16 @@ object ParseStage {
 
   /** Event-time window as int64 yyyyMMddHHmm, minute floored to the window
     * size, computed in the event's own UTC offset — exact integer semantics
-    * of metricgenerator.go:131-158. Null timestamp → the Go zero-time window.
+    * of metricgenerator.go:131-158, whose switch floors every size other
+    * than 1, 5, 15, 30 and 60 to 10 minutes (like `RefOracle.timeWindow`).
+    * Null timestamp → the Go zero-time window.
     */
   def timeWindowCol(logTs: Column, tzOffsetSec: Column, windowMinutes: Int = 10): Column = {
-    require(Set(1, 5, 10, 15, 30, 60).contains(windowMinutes), s"bad window $windowMinutes")
+    val size = if (Set(1, 5, 15, 30, 60).contains(windowMinutes)) windowMinutes else 10
     val local = localTs(logTs, tzOffsetSec)
     val minuteFloored =
-      if (windowMinutes == 60) lit(0L)
-      else (minute(local) - (minute(local) % windowMinutes)).cast("long")
+      if (size == 60) lit(0L)
+      else (minute(local) - (minute(local) % size)).cast("long")
     // r6 (opt guide §1.2 per-task work): integer date-part arithmetic in
     // place of date_format("yyyyMMddHH") — the formatter built a per-row
     // string only to cast it back to long. year/month/day/hour are

@@ -169,10 +169,10 @@ object Route {
   type FirstTurn = (String, String, Int)
 
   /** What a fan-out leaves: the manifest JSON, the input's row total, and
-    * the first turns per (conv_id, key) when the caller asked for them and
-    * the stats pass ran (None when a resume tier served the call unscanned).
+    * the first turns per (conv_id, key) when the caller asked for them
+    * (empty otherwise). The stats pass counts all three on every call.
     */
-  final case class Lineage(manifest: String, rows: Long, firstTurns: Option[Seq[FirstTurn]] = None)
+  final case class Lineage(manifest: String, rows: Long, firstTurns: Seq[FirstTurn])
 
   /** partition columns of the fan-out write; they also lead its sort */
   private val fanOutPartitionCols = Seq("sink", "bucket")
@@ -187,7 +187,7 @@ object Route {
     * The checksum is hashed before the grouping sets duplicate the rows, so
     * the line text goes no further than the projection.
     */
-  def groupStats(routed: DataFrame, firstTurnsOf: Option[Column]): DataFrame = {
+  private def groupStats(routed: DataFrame, firstTurnsOf: Option[Column]): DataFrame = {
     val perSink = Seq(col("sink"), col("bucket"))
     val perConv = Seq(col("conv_id"), col("key"))
     val sets = perSink +: firstTurnsOf.map(_ => perConv).toSeq
@@ -205,7 +205,7 @@ object Route {
   }
 
   /** the per-conversation first turns among collected `groupStats` rows */
-  def firstTurns(stats: Array[Row]): Seq[FirstTurn] =
+  private def firstTurns(stats: Array[Row]): Seq[FirstTurn] =
     stats.toSeq.filter(_.getAs[Boolean]("per_conv"))
       .map(r => (r.getAs[String]("key"), r.getAs[String]("conv_id"), r.getAs[Int]("min_turn")))
 
@@ -241,16 +241,19 @@ object Route {
     * `spark.sql.shuffle.partitions`) and each task sorts its rows by
     * (sink, bucket, conv_id, turn_idx) — the only sort in the write's plan —
     * so every file is in (conv_id, turn_idx) order.
-    * The manifest records per-(sink, bucket) row counts and order-free
-    * checksums plus the input fingerprint; a rerun over the same input
-    * finds the matching manifest and skips the write entirely — the
-    * checkpoint-resume contract (north rule), in this process or another.
-    * A changed input (different fingerprint) rewrites and re-manifests. The
-    * fingerprint covers the written plan, its exchange width and sort
-    * included, so output written under another layout is rewritten once.
+    *
+    * Every call runs one stats pass (`groupStats`): per-(sink, bucket) row
+    * counts and order-free checksums, whose totals with the written plan's
+    * fingerprint make the input fingerprint. The manifest records both. A
+    * rerun whose fingerprint matches the stored manifest skips the write and
+    * returns that manifest as it is, writing nothing — the checkpoint-resume
+    * contract (north rule), in this process or another. Anything else
+    * (changed input, plan or exchange width; a missing, truncated or
+    * malformed manifest) rewrites and re-manifests.
     *
     * `firstTurnsOf` adds the per-(conv_id, key) first-turn family to the
-    * stats pass (the metrics sink's domain dimension rides along this way).
+    * stats pass (the metrics sink's domain dimension rides along this way),
+    * so a resumed call returns the first turns as well.
     *
     * Returns the manifest JSON, the input's row total and those first turns.
     */
@@ -262,74 +265,28 @@ object Route {
         case m: ObjectNode => Some(m)
         case _ => None // empty or not an object: recompute
       } catch { case _: java.io.IOException => None } // missing or malformed
-    // ZERO-SCAN resume tier (r5): fingerprint the input's FILE METADATA
-    // (sorted paths + lengths — a listing, no data read; the Iceberg
-    // analogue is comparing snapshot ids). A rerun over the byte-identical
-    // input skips without launching any job; input rewritten under new file
-    // names falls through to the content-checksum tier below, which
-    // preserves the original contract (identical CONTENT still skips the
-    // write at the cost of one stats scan).
-    val inputFiles = routed.inputFiles.sorted
     val toWrite = salted(routed.withColumn("bucket", dayBucket), partitions,
       sortPrefix = fanOutPartitionCols)
-    // the (plan, layout) fingerprint, mixed into BOTH resume tiers: the
-    // metadata tier (below) and the content tier's input fingerprint —
-    // ADVICE r5 (medium): the content fingerprint alone is a property of
-    // the INPUT (total rows + global checksum), so a changed routing plan or
-    // partitions argument over unchanged input used to match the content
-    // tier, skip the rewrite, and stamp the NEW plan's metadata fingerprint
-    // onto output written by the OLD plan — every later run then served
-    // stale output through the zero-scan tier.
+    // the (plan, layout) fingerprint is part of the input fingerprint: rows
+    // and checksum alone are a property of the INPUT, so a changed routing
+    // plan or partitions argument over unchanged input would otherwise
+    // match and keep output written by the old plan (ADVICE r5)
     val planFp = planFingerprint(toWrite.queryExecution.analyzed, partitions)
-    val metaFp = {
-      val hconf = routed.sparkSession.sparkContext.hadoopConfiguration
-      // covers the PIPELINE as well as the input: the plan fingerprint is
-      // mixed in, so a changed routing/projection or layout over unchanged
-      // files re-runs instead of serving stale output; file modification
-      // time catches an in-place same-length rewrite
-      var h = 0xcbf29ce484222325L ^ planFp
-      h *= 0x100000001b3L
-      inputFiles.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        h ^= graft.operators.Dedup.fnv1a(f); h *= 0x100000001b3L
-        val (len, mtime) =
-          try {
-            val st = p.getFileSystem(hconf).getFileStatus(p)
-            (st.getLen, st.getModificationTime)
-          } catch { case _: java.io.IOException => (-1L, -1L) }
-        h ^= len; h *= 0x100000001b3L
-        h ^= mtime; h *= 0x100000001b3L
-      }
-      h
-    }
-    // in-memory inputs (no backing files) all hash alike — the metadata tier
-    // is only meaningful for file-backed plans; others go straight to the
-    // content tier. A manifest whose input fingerprint is malformed is not
-    // served.
-    if (inputFiles.nonEmpty)
-      stored.filter(m => longAt(m, "input_files").contains(metaFp)).flatMap(storedInput) match {
-        case Some((_, rows, _)) => return Lineage(json.writeValueAsString(stored.get), rows)
-        case None =>
-      }
     // ONE stats pass: per-(sink, bucket) rows/checksum/min/max, collected as
     // a bounded (sinks × day-buckets) result, plus the requested first turns.
     // The global input fingerprint folds out of the same rows — bit_xor is
     // associative, so the xor of the per-group checksums IS the whole-input
-    // checksum. Total input scans: 2 (this aggregate + the write) — and 0 on
-    // a same-files rerun via the metadata tier above.
+    // checksum. Total input scans: 2 (this aggregate + the write), 1 on a
+    // resume.
     val stats = groupStats(routed, firstTurnsOf).collect()
     val groups = stats.filterNot(_.getAs[Boolean]("per_conv"))
       .sortBy(r => (r.getAs[String]("sink"), r.getAs[String]("bucket")))
-    val perConv = firstTurnsOf.map(_ => firstTurns(stats))
+    val perConv = firstTurns(stats)
     val totalRows = groups.map(_.getAs[Long]("rows")).sum
     val totalChecksum = groups.map(_.getAs[Long]("checksum")).foldLeft(0L)(_ ^ _)
 
     stored.filter(m => storedInput(m).contains((planFp, totalRows, totalChecksum))) match {
-      case Some(m) =>
-        // same CONTENT under different file metadata: the written data is
-        // valid — skip the write and refresh the metadata fingerprint so
-        // the next rerun takes the zero-scan tier
-        return Lineage(write(manifestPath, m.put("input_files", metaFp)), totalRows, perConv)
+      case Some(m) => return Lineage(json.writeValueAsString(m), totalRows, perConv)
       case None =>
     }
 
@@ -339,7 +296,7 @@ object Route {
       .partitionBy(fanOutPartitionCols: _*)
       .parquet(outDir + "/data")
 
-    val manifest = json.createObjectNode().put("input_files", metaFp)
+    val manifest = json.createObjectNode()
     manifest.putObject("input")
       .put("plan", planFp).put("rows", totalRows).put("checksum", totalChecksum)
     val entries = manifest.putArray("partitions")

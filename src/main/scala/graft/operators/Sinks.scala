@@ -78,38 +78,6 @@ object Sinks {
     }
   }
 
-  /** Catalog-table (DataFrameWriterV2) face of the metrics sink: same rows,
-    * written with `writeTo(table).partitionedBy(metric_type)` against the
-    * session catalog — the API an Iceberg deployment uses verbatim (swap the
-    * catalog, keep the call). replace=false merges like writeMetrics, via
-    * the catalog table instead of a path.
-    */
-  def writeMetricsTable(metricRows: DataFrame, domainDim: DataFrame, table: String,
-      replace: Boolean = true): Unit = {
-    val spark = metricRows.sparkSession
-    val rows = withDomainRows(metricRows, domainDim)
-    val merged =
-      if (replace || !spark.catalog.tableExists(table)) rows
-      else {
-        val keys = Seq("domain_id", "conv_id", "metric_type", "key_value", "time_window")
-        // materialize the merge before the createOrReplace drops the source
-        val m = spark.table(table)
-          .unionByName(rows)
-          .groupBy(keys.map(col): _*)
-          .agg(sum(col("metric_value")).as("metric_value"))
-          .select("domain_id", "conv_id", "metric_type", "key_value", "time_window", "metric_value")
-          .localCheckpoint()
-        m
-      }
-    // REPLACE TABLE AS SELECT needs a v2 catalog (Iceberg has it; the
-    // built-in session catalog does not) — drop+create is the v1-compatible
-    // spelling of createOrReplace, same V2 writer API for the write itself
-    if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE $table")
-    merged.writeTo(table).using("parquet")
-      .partitionedBy(col("metric_type"))
-      .create()
-  }
-
   /** R4 raw-log sink (db/mysqldb.go:161-222) — filter F1 upstream; masking
     * and truncation via Route.rawLogProjection.
     */

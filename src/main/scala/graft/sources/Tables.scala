@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.model.TranscriptTurn
 
@@ -92,52 +93,11 @@ object Tables {
     // must NOT be shuffled just to decode it.
     val df = spark.read.parquet(path)
     val parallelism = spark.sparkContext.defaultParallelism
-    if (estimatedScanSplits(spark, path) >= parallelism) df
+    // the planned scan's own split count (planning launches no job)
+    val splits = df.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.getOrElse(0)
+    if (splits >= parallelism) df
     else df.repartition(parallelism, col("doc_id"))
-  }
-
-  /** Scan-split count for a parquet dir from the file listing alone —
-    * the same size/open-cost bin-packing FilePartition applies, WITHOUT
-    * materializing df.rdd just to read getNumPartitions (VERDICT r4
-    * housekeeping #4: that conversion builds the whole deserialization
-    * RDD lineage driver-side for a number the listing already determines).
-    */
-  private def estimatedScanSplits(spark: SparkSession, path: String): Int = {
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sizes = fs.listStatus(fsPath)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(_.getLen)
-    if (sizes.isEmpty) return 0
-    val totalBytes = sizes.map(_ + openCost).sum
-    // ADVICE r5: FilePartition derives bytesPerCore from
-    // spark.sql.files.minPartitionNum when set, defaultParallelism otherwise
-    // — mirror that instead of hard-coding defaultParallelism so the
-    // estimate tracks the real split count under a configured floor
-    val minPartitionNum = conf.filesMinPartitionNum
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    // max(1, …) also guards openCostInBytes=0 on a tiny table, where the
-    // formula would otherwise yield maxSplit=0 and the split-range step
-    // below would throw (code-review r5)
-    val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, totalBytes / math.max(1, minPartitionNum))))
-    // mirror FilePartition.getFilePartitions exactly: parquet splits at
-    // maxSplit boundaries, sorted size-desc, and a partition closes when
-    // currentSize + splitLen (WITHOUT open cost) would exceed maxSplit;
-    // open cost is then added to currentSize per accepted split
-    val splitFiles = sizes.flatMap { len =>
-      if (len == 0) Seq(0L)
-      else (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
-    }.sortBy(-_)
-    var parts = 0
-    var cur = 0L
-    splitFiles.foreach { s =>
-      if (cur > 0 && cur + s > maxSplit) { parts += 1; cur = 0L }
-      cur += s + openCost
-    }
-    if (cur > 0) parts += 1
-    parts
   }
 }

@@ -183,6 +183,59 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     assert(records.get <= 6 * inputRecords, s"${records.get} records read")
   }
 
+  test("a rerun into the same outDir reads the input at most 5x and leaves routed/ untouched") {
+    val out = java.nio.file.Files.createTempDirectory("graft-rerun").toString
+    val first = Pipeline.run(spark, sf, out)
+    def routedFiles(): Map[String, (Long, Long)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "routed"))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+        f.toString -> (java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis)
+      }.toMap
+      finally walk.close()
+    }
+    val before = routedFiles()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    val second =
+      try {
+        val r = Pipeline.run(spark, sf, out)
+        TestBus.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+    assert(second.manifest == first.manifest && second.rows == first.rows)
+    assert(routedFiles() == before)
+    // the fan-out's stats pass, COUNTER, metrics, relog and raw logs
+    assert(records.get <= 5 * 6000L, s"${records.get} records read") // sf0.001 transcripts
+  }
+
+  test("TimeWindowSizeMinutes other than 1, 5, 15, 30 and 60 floors to 10, like the reference") {
+    import spark.implicits._
+    val sizes = Seq(1, 5, 10, 15, 30, 60, 0, 7, 20, 120, -5)
+    val turns = Tables.localTurns(2000)
+    val oracle = turns.flatMap { t =>
+      graft.parse.LineParser.parseAuto(t.text).map(p =>
+        (t.conv_id, t.turn_idx) -> sizes.map(RefOracle.timeWindow(p, _)))
+    }.toMap
+    val windows = ParseStage.parse(spark.createDataset(turns).toDF())
+      .select(col("conv_id") +: col("turn_idx") +: sizes.map(w =>
+        ParseStage.timeWindowCol(col("log_ts"), col("tz_offset_sec"), w)): _*)
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> sizes.indices.map(i => r.getLong(i + 2))).toMap
+    assert(windows == oracle)
+    def metricsSink(size: Int) = {
+      val out = java.nio.file.Files.createTempDirectory(s"graft-window-$size").toString
+      Pipeline.run(spark, sf, out, JobConfig(handlers = Seq("METRICS"), timeWindowSizeMinutes = size))
+      spark.read.parquet(s"$out/metrics").collect().map(_.toSeq).toSeq
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+    }
+    assert(metricsSink(7) == metricsSink(10))
+  }
+
   test("metrics sink: a conversation with two domains gets a row per domain, ids by first sight") {
     import graft.operators.{Enrich, Sinks}
     import spark.implicits._
@@ -369,28 +422,6 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.toSeq).toSet
     assert(accumulated == full)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "._backup"))) // consumed by the swap
-  }
-
-  test("writerV2 metrics table: createOrReplace + accumulate merge against the catalog") {
-    import graft.operators.{Aggregates, Enrich, Sinks}
-    import spark.implicits._
-    val parsed = ParseStage.parse(spark.createDataset(Tables.localTurns(1000)).toDF())
-    val dim = Enrich.withDomainId(parsed).select("conv_id", "domain_id").distinct()
-    val halfA = parsed.filter(col("turn_idx") % 2 === 0)
-    val halfB = parsed.filter(col("turn_idx") % 2 =!= 0)
-    val table = "graft_metrics_v2_test"
-    Sinks.writeMetricsTable(Aggregates.metricRows(halfA), dim, table, replace = false)
-    Sinks.writeMetricsTable(Aggregates.metricRows(halfB), dim, table, replace = false)
-    val accumulated = spark.table(table)
-      .select("domain_id", "conv_id", "metric_type", "key_value", "time_window", "metric_value")
-      .collect().map(_.toSeq).toSet
-    val full = Sinks.withDomainRows(Aggregates.metricRows(parsed), dim)
-      .collect().map(_.toSeq).toSet
-    assert(accumulated == full)
-    // replace drops previous content; table stays partitioned by metric_type
-    Sinks.writeMetricsTable(Aggregates.metricRows(halfA), dim, table, replace = true)
-    assert(spark.table(table).count() == Aggregates.metricRows(halfA).count())
-    spark.sql(s"DROP TABLE $table")
   }
 
   test("raw-log truncation slices BYTES like Go str[:n], not characters (mysqldb.go:226-238)") {

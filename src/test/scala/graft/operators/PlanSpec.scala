@@ -210,6 +210,30 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("media table: a hash exchange only when the scan has fewer splits than cores") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.sources.Tables
+    val cores = spark.sparkContext.defaultParallelism
+    def scanSplits = spark.read.parquet(Tables.mediaPath(sf)).rdd.getNumPartitions
+    def exchanges = AqeHelper.collect(Tables.media(spark, sf).queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    Tables.media(spark, sf) // synthesizes the table on first use
+    assert(scanSplits >= cores)
+    assert(exchanges.isEmpty)
+    // one split-size floor for the whole table: fewer, larger splits
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      assert(scanSplits < cores)
+      exchanges match {
+        case Seq(h: HashPartitioning) =>
+          assert(h.numPartitions == cores && h.references.map(_.name).toSeq == Seq("doc_id"))
+        case other => fail(s"expected one hash exchange on doc_id, got $other")
+      }
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  }
+
   test("salted fan-out exchanges on (conv_id, salt) and sorts within partitions") {
     import org.apache.spark.sql.functions._
     val parsed = ParseStage.parse(graft.sources.Tables.transcripts(spark, sf)).limit(10)
