@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
-import graft.sources.TranscriptGen
+import graft.sources.{Tables, TranscriptGen}
 
 /** Order-of-magnitude scale sweep for the training-data operators
   * (VERDICT r4 item 4): the 100 TB claims for the banded dedup / ANN paths
@@ -97,10 +97,10 @@ object ScaleSweep {
   private def docs(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     ensure(docsPath(n)) {
-      spark.range(0L, n, 1L, 64)
+      Tables.writer(spark.range(0L, n, 1L, 64)
         .map(i => (i, docText(i)))
-        .toDF("doc_id", "text")
-        .write.mode(SaveMode.Overwrite).parquet(docsPath(n))
+        .toDF("doc_id", "text"))
+        .mode(SaveMode.Overwrite).parquet(docsPath(n))
     }
     spark.read.parquet(docsPath(n))
   }
@@ -108,10 +108,10 @@ object ScaleSweep {
   private def embeddings(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     ensure(embPath(n)) {
-      spark.range(0L, n, 1L, 64)
+      Tables.writer(spark.range(0L, n, 1L, 64)
         .map(i => (i, vec(i).toSeq))
-        .toDF("vec_id", "embedding")
-        .write.mode(SaveMode.Overwrite).parquet(embPath(n))
+        .toDF("vec_id", "embedding"))
+        .mode(SaveMode.Overwrite).parquet(embPath(n))
     }
     spark.read.parquet(embPath(n))
   }
@@ -124,14 +124,14 @@ object ScaleSweep {
     ensure(bandsPath(n)) {
       // the ONE production band-table builder — measuring a private copy
       // here could silently drift from what SigTables pins (code-review r5)
-      graft.sources.SigTables.minhashBands(docs(spark, n))
-        .write.mode(SaveMode.Overwrite).parquet(bandsPath(n))
+      Tables.writer(graft.sources.SigTables.minhashBands(docs(spark, n)))
+        .mode(SaveMode.Overwrite).parquet(bandsPath(n))
     }
     ensure(shinglesPath(n)) {
-      docs(spark, n).select(col("doc_id"), col("text")).as[(Long, String)]
+      Tables.writer(docs(spark, n).select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) => (id, Dedup.sortedShingles(text).toSeq) }
-        .toDF("doc_id", "shingles")
-        .write.mode(SaveMode.Overwrite).parquet(shinglesPath(n))
+        .toDF("doc_id", "shingles"))
+        .mode(SaveMode.Overwrite).parquet(shinglesPath(n))
     }
     (spark.read.parquet(bandsPath(n)), spark.read.parquet(shinglesPath(n)))
   }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Routing / sink fan-out (SURVEY.md §2 R1-R4): a deterministic rule table
   * evaluated as one `when` chain producing a `sink` label column, then a
   * single partitioned write — one pass over the data for all sinks instead
@@ -292,7 +294,7 @@ object Route {
 
     // a write that dies part-way must not leave the old manifest beside it
     Files.deleteIfExists(manifestPath)
-    toWrite.write.mode(SaveMode.Overwrite)
+    Tables.writer(toWrite).mode(SaveMode.Overwrite)
       .partitionBy(fanOutPartitionCols: _*)
       .parquet(outDir + "/data")
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Table sinks (SURVEY.md §2 R3/R4): the reference's MySQL upsert targets
   * re-expressed as partitioned Parquet tables (Iceberg stand-in, §1.5).
   */
@@ -56,7 +58,7 @@ object Sinks {
         throw new java.io.IOException(s"backup recovery failed: $recoverBackup -> $target")
     }
     if (replace || !fs.exists(new org.apache.hadoop.fs.Path(outDir, "_SUCCESS"))) {
-      withDomain.write.mode(SaveMode.Overwrite).partitionBy("metric_type").parquet(outDir)
+      Tables.writer(withDomain).mode(SaveMode.Overwrite).partitionBy("metric_type").parquet(outDir)
     } else {
       val keys = Seq("domain_id", "conv_id", "metric_type", "key_value", "time_window")
       val merged = spark.read.parquet(outDir)
@@ -66,7 +68,8 @@ object Sinks {
         .select("domain_id", "conv_id", "metric_type", "key_value", "time_window", "metric_value")
       val staging = new org.apache.hadoop.fs.Path(outDir + "._staging")
       val backup = new org.apache.hadoop.fs.Path(outDir + "._backup")
-      merged.write.mode(SaveMode.Overwrite).partitionBy("metric_type").parquet(staging.toString)
+      Tables.writer(merged).mode(SaveMode.Overwrite).partitionBy("metric_type")
+        .parquet(staging.toString)
       if (fs.exists(backup)) fs.delete(backup, true) // stale leftover from a crash
       if (!fs.rename(target, backup))
         throw new java.io.IOException(s"accumulate swap failed: $target -> $backup")
@@ -84,9 +87,9 @@ object Sinks {
   def writeRawLogs(parsed: DataFrame, outDir: String, maskIps: Boolean,
       onlyRelevant: Boolean = true, hostId: Int = 0): Unit = {
     val rows = if (onlyRelevant) parsed.filter(Route.isRelevant) else parsed
-    Route.rawLogProjection(rows, maskIps, hostId)
-      .withColumn("log_date", date_format(col("request_ts"), "yyyyMMdd"))
-      .write.mode(SaveMode.Overwrite)
+    Tables.writer(Route.rawLogProjection(rows, maskIps, hostId)
+      .withColumn("log_date", date_format(col("request_ts"), "yyyyMMdd")))
+      .mode(SaveMode.Overwrite)
       .partitionBy("log_date")
       .parquet(outDir)
   }
@@ -95,8 +98,8 @@ object Sinks {
     * json.Marshal field names, null fields kept (Go emits "UserAgent":null).
     */
   def writeJsonRelog(parsed: DataFrame, outDir: String): Unit =
-    Route.goJsonProjection(parsed)
-      .write.mode(SaveMode.Overwrite)
+    Tables.writer(Route.goJsonProjection(parsed))
+      .mode(SaveMode.Overwrite)
       .option("ignoreNullFields", "false")
       .json(outDir)
 }

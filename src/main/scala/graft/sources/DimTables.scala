@@ -48,7 +48,7 @@ object DimTables {
     val dims = Enrich.firstSightDims(withName, Seq("role", "tool", "domain_name"))
     def write(pairs: Seq[(String, Int)], keyCol: String, idCol: String, path: String): Unit = {
       import spark.implicits._
-      pairs.toDF(keyCol, idCol).coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+      Tables.writer(pairs.toDF(keyCol, idCol).coalesce(1)).mode(SaveMode.Overwrite).parquet(path)
     }
     write(dims("role"), "role", "role_id", rolePath(sfDir))
     write(dims("tool"), "tool", "tool_id", toolPath(sfDir))

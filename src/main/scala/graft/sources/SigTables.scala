@@ -131,7 +131,7 @@ object SigTables {
   def ensure(spark: SparkSession, sfDir: String): Unit = {
     def write(path: String, df: => DataFrame): Unit =
       if (!Files.exists(Paths.get(path, "_SUCCESS")))
-        df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+        Tables.writer(df.coalesce(1)).mode(SaveMode.Overwrite).parquet(path)
     write(docSigsPath(sfDir), docSigs(Tables.read(spark, sfDir, "documents")))
     write(minhashBandsPath(sfDir), minhashBands(Tables.read(spark, sfDir, "documents")))
     write(embSigsPath(sfDir), embSigs(Tables.read(spark, sfDir, "embeddings")))

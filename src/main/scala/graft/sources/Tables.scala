@@ -2,8 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.types._
 
 import graft.model.TranscriptTurn
 
@@ -25,16 +26,40 @@ object Tables {
   def read(spark: SparkSession, sfDir: String, table: String): DataFrame =
     spark.read.parquet(s"$sfDir/$table.parquet")
 
+  /** `ds.write` with `file:` paths served by [[NioLocalFileSystem]], which
+    * sets permissions without forking a `chmod` per file and directory.
+    * Spark copies a write's options into that job's Hadoop configuration,
+    * from which its tasks and its commit resolve their filesystem. The cache
+    * is disabled for the write because `FileSystem.CACHE` keys on scheme,
+    * authority and user, not on the configuration: the session's `file:`
+    * instance (Hive's `ProxyLocalFileSystem` in spark-shell) would be served
+    * instead. Both keys are `fs.file.*`, so other schemes are untouched.
+    */
+  def writer[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write
+      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+
   def transcriptsPath(sfDir: String): String = s"$dataRoot/transcripts/${sfName(sfDir)}"
 
+  /** the transcripts table's columns, as `TranscriptTurn` writes them */
+  val transcriptSchema: StructType = StructType(Seq(
+    StructField("conv_id", StringType),
+    StructField("turn_idx", IntegerType),
+    StructField("role", StringType),
+    StructField("text", StringType),
+    StructField("tool", StringType),
+    StructField("ts", TimestampType)))
+
   /** Deterministic synth-on-first-use of the transcripts table for a scale
-    * dir. Pure function of the sf name — safe to regenerate anywhere.
+    * dir. Pure function of the sf name — safe to regenerate anywhere. The
+    * schema is given, so reading launches no schema-inference job.
     */
   def transcripts(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = transcriptsPath(sfDir)
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) synthesize(spark, sfDir, path)
-    spark.read.parquet(path)
+    spark.read.schema(transcriptSchema).parquet(path)
   }
 
   private def synthesize(spark: SparkSession, sfDir: String, path: String): Unit = {
@@ -45,15 +70,14 @@ object Tables {
     // enough files that a local[32] scan parallelizes fully even though the
     // files are far below spark.sql.files.maxPartitionBytes
     val parts = math.max(64, (n / 50000L).toInt)
-    spark.range(0, n, 1, parts)
+    val turns = spark.range(0, n, 1, parts)
       .as[Long]
       .map(i => TranscriptGen.turn(i, lay))
       // deterministic scramble (FIXTURES.md §1): rows land hash-scattered
       // across files so nothing downstream can lean on input order — the
       // engine must recover stable (conv_id, turn_idx) order itself
       .repartitionByRange(parts, xxhash64(col("conv_id"), col("turn_idx")))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(path)
+    writer(turns).mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** In-memory variant for tests/oracle comparison (small n only). */
@@ -81,9 +105,9 @@ object Tables {
     import org.apache.spark.sql.functions.col
     val path = mediaPath(sfDir)
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      graft.operators.Multimodal.withPayload(read(spark, sfDir, "documents"))
-        .repartition(16, col("doc_id"))
-        .write.mode(SaveMode.Overwrite).parquet(path)
+      writer(graft.operators.Multimodal.withPayload(read(spark, sfDir, "documents"))
+        .repartition(16, col("doc_id")))
+        .mode(SaveMode.Overwrite).parquet(path)
     // local media tables are a few small files, and parquet splits at file
     // granularity — one scan task would serialize the whole decode. When
     // (and only when) the scan yields fewer splits than the engine has

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 import graft.operators.ParseStage
+import graft.sources.Tables
 
 /** Structured Streaming face of the pipeline (SURVEY.md §2 S2/A8 streaming
   * analog): the same parse stage over `readStream`, with event-time tumbling
@@ -16,16 +16,8 @@ import graft.operators.ParseStage
   */
 object StreamingPipeline {
 
-  val transcriptSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType),
-    StructField("turn_idx", IntegerType),
-    StructField("role", StringType),
-    StructField("text", StringType),
-    StructField("tool", StringType),
-    StructField("ts", TimestampType)))
-
   def readTranscriptStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(transcriptSchema).parquet(path)
+    spark.readStream.schema(Tables.transcriptSchema).parquet(path)
 
   /** windowed status-code rates with watermark-bounded state */
   def windowedStatusCounts(stream: DataFrame, windowMinutes: Int = 10,

@@ -39,7 +39,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming counter ticks: deltas per batch, final snapshot equals the batch counter (A3)") {
     import graft.app.CounterReport
-    val stream = spark.readStream.schema(StreamingPipeline.transcriptSchema)
+    val stream = spark.readStream.schema(Tables.transcriptSchema)
       .option("maxFilesPerTrigger", "1") // force multiple micro-batches = multiple ticks
       .parquet(dir)
     val reports = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -115,7 +115,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("conv_id", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("domain_id", org.apache.spark.sql.types.IntegerType))))
-    val stream = spark.readStream.schema(StreamingPipeline.transcriptSchema)
+    val stream = spark.readStream.schema(Tables.transcriptSchema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val q = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
