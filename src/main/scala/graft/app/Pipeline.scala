@@ -1,8 +1,13 @@
 package graft.app
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,6 +131,18 @@ object Pipeline {
 
   final case class Result(manifest: String, report: String, rows: Long)
 
+  /** One run: every sink is an action over the same parsed input, and none
+    * reads another's output, so they run side by side like the reference's
+    * handler goroutines (main.go's pipeline wiring, SURVEY §1). COUNTER,
+    * relog, raw logs and the fan-out's stats pass start at once; the
+    * fan-out's write follows its stats pass, and the metrics sink starts as
+    * soon as that pass has returned the first turns its domain dimension
+    * needs. Spark's FIFO scheduler shares the cores between their jobs.
+    *
+    * Failure: the first action to fail cancels the others' jobs; `run`
+    * waits for every action to settle and rethrows that first exception as
+    * it was thrown. No pool thread outlives the call.
+    */
   def run(spark: SparkSession, sfDir: String, outDir: String, cfg: JobConfig = JobConfig(),
       osCfg: Option[JobConfig] = None): Result = {
     val transcripts0 = Tables.transcripts(spark, sfDir)
@@ -141,38 +158,50 @@ object Pipeline {
     // J2: the parsed vhost domain, else the configured one (main.go:666-669)
     val domainName = coalesce(nullif(col("domain"), lit("")), lit(cfg.domainName))
 
-    // fan-out with lineage (idempotent resume), as wide as the session's
-    // shuffles; its stats pass also finds each conversation's domains
-    val lineage = Route.fanOutWithLineage(routed, s"$outDir/routed",
-      partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      firstTurnsOf = Option.when(metrics)(domainName))
-
+    // the fan-out's stats pass, handed to the metrics sink when it returns
+    val stats = Promise[Route.FanOut]()
+    var lineage: Route.Lineage = null
     var report = ""
-    if (cfg.handlers.contains("COUNTER")) {
-      report = CounterReport.format(CounterReport.snapshot(parsed), None,
-        cfg.counterTopNForKeyedMetrics)
-    }
-    if (metrics) {
-      val metricRows: DataFrame =
-        if (cfg.arrivalOrderMetrics)
-          MetricsArrivalOrder.metricRows(parsed, cfg.timeWindowSizeMinutes, cfg.metricsWindowSize).toDF()
-        else Aggregates.metricRows(parsed, cfg.timeWindowSizeMinutes)
-      // the domain dimension: the same ids as Enrich.withDomainId, numbered
-      // locally from each (conv_id, domain)'s first turn, as the fan-out's
-      // stats pass found them
-      val ids = Enrich.firstSightIds(lineage.firstTurns).toMap
-      import spark.implicits._
-      val domainDim = lineage.firstTurns.map { case (domain, conv, _) => (conv, ids(domain)) }
-        .toDF("conv_id", "domain_id")
-      Sinks.writeMetrics(metricRows, domainDim, s"$outDir/metrics", cfg.replaceExistingMetrics)
-    }
-    if (cfg.handlers.contains("WRITE_TO_FILE")) {
-      Sinks.writeJsonRelog(parsed, s"$outDir/relog")
-    }
-    Sinks.writeRawLogs(parsed, s"$outDir/rawlogs", cfg.saveLogsToDbMaskIps,
-      cfg.saveLogsToDbOnlyRelevant, cfg.hostId)
+    val sinks: Seq[(String, () => Unit)] = Seq(
+      // fan-out with lineage (idempotent resume), as wide as the session's
+      // shuffles; its stats pass also finds each conversation's domains
+      Some("fanout" -> { () =>
+        val fanOut =
+          try Route.fanOutWithLineage(routed, s"$outDir/routed",
+            partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt,
+            firstTurnsOf = Option.when(metrics)(domainName))
+          catch { case e: Throwable => stats.failure(e); throw e }
+        stats.success(fanOut)
+        lineage = Route.fanOutWithLineage(fanOut)
+      }),
+      Option.when(cfg.handlers.contains("COUNTER"))("counter" -> { () =>
+        report = CounterReport.format(CounterReport.snapshot(parsed), None,
+          cfg.counterTopNForKeyedMetrics)
+      }),
+      Option.when(metrics)("metrics" -> { () =>
+        val metricRows: DataFrame =
+          if (cfg.arrivalOrderMetrics)
+            MetricsArrivalOrder.metricRows(parsed, cfg.timeWindowSizeMinutes, cfg.metricsWindowSize).toDF()
+          else Aggregates.metricRows(parsed, cfg.timeWindowSizeMinutes)
+        // the domain dimension: ids numbered locally from each (conv_id,
+        // domain)'s first turn, as the fan-out's stats pass found them
+        val firstTurns = Await.result(stats.future, Duration.Inf).firstTurns
+        val ids = Enrich.firstSightIds(firstTurns).toMap
+        import spark.implicits._
+        val domainDim = firstTurns.map { case (domain, conv, _) => (conv, ids(domain)) }
+          .toDF("conv_id", "domain_id")
+        Sinks.writeMetrics(metricRows, domainDim, s"$outDir/metrics", cfg.replaceExistingMetrics)
+      }),
+      Option.when(cfg.handlers.contains("WRITE_TO_FILE"))("relog" -> { () =>
+        Sinks.writeJsonRelog(parsed, s"$outDir/relog")
+      }),
+      Some("rawlogs" -> { () =>
+        Sinks.writeRawLogs(parsed, s"$outDir/rawlogs", cfg.saveLogsToDbMaskIps,
+          cfg.saveLogsToDbOnlyRelevant, cfg.hostId)
+      })).flatten
+    runAll(spark.sparkContext, sinks)
 
-    // counted by the fan-out's stats pass, or read from its stored manifest
+    // counted by the fan-out's stats pass
     val rows = lineage.rows
 
     // S5 analog: job-metrics snapshot next to the lineage manifest — rows
@@ -191,6 +220,41 @@ object Pipeline {
     java.nio.file.Files.writeString(mp, jm)
 
     Result(lineage.manifest, report, rows)
+  }
+
+  /** Runs `actions` at once, one thread each, from a pool that lives for
+    * this call, and waits for all of them. Their jobs carry one tag and the
+    * action's name as their description. After the first failure the tag's
+    * jobs are cancelled until every action has settled (an action may launch
+    * its next job after the first cancel); then that failure is rethrown.
+    */
+  private def runAll(sc: SparkContext, actions: Seq[(String, () => Unit)]): Unit = {
+    val tag = s"pipeline-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(actions.size, r => new Thread(r, "pipeline-sinks"))
+    try {
+      val done = new ExecutorCompletionService[Unit](pool)
+      actions.foreach { case (name, action) =>
+        done.submit { () =>
+          sc.addJobTag(tag)
+          sc.setJobDescription(name)
+          action()
+        }
+      }
+      var failure: Throwable = null
+      var left = actions.size
+      while (left > 0) {
+        val next = if (failure == null) done.take() else done.poll(100, TimeUnit.MILLISECONDS)
+        if (next != null) {
+          left -= 1
+          try next.get() catch { case e: ExecutionException => if (failure == null) failure = e.getCause }
+        }
+        if (failure != null) sc.cancelJobsWithTag(tag)
+      }
+      if (failure != null) throw failure
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 
   /** spark-submit entry: args = sfDir outDir [configJsonPath]. A config is

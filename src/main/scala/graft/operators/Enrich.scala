@@ -67,10 +67,6 @@ object Enrich {
     pairs.toDF(keyCol, idCol)
   }
 
-  /** single-dimension variant (kept for the generic API) */
-  def dimension(df: DataFrame, keyCol: String, idCol: String): DataFrame =
-    dimDf(df, firstSightDims(df, Seq(keyCol))(keyCol), keyCol, idCol)
-
   /** role + tool enrichment (the north-star lookup dims) — both dims from
     * one aggregation pass, then two broadcast joins.
     *
@@ -125,17 +121,5 @@ object Enrich {
     val newPairs = firstSightDims(unseen, Seq(keyCol))(keyCol)
       .map { case (k, i) => (k, maxId + i) }
     (existing ++ newPairs).toDF(keyCol, idCol)
-  }
-
-  /** J2 + J1: per-row domain = parsed vhost domain if non-empty else the
-    * configured default (main.go:666-669), then surrogate id via broadcast.
-    * Self-contained (second scan) like withRoleToolIds; standing deployments
-    * use withDomainIdFrom + DimTables.
-    */
-  def withDomainId(parsed: DataFrame, defaultDomain: String = graft.sources.TranscriptGen.defaultDomain): DataFrame = {
-    val withName = parsed.withColumn(
-      "domain_name", coalesce(nullif(col("domain"), lit("")), lit(defaultDomain)))
-    val dim = dimension(withName, "domain_name", "domain_id")
-    withName.join(broadcast(dim), Seq("domain_name"), "left")
   }
 }

@@ -170,11 +170,8 @@ object Route {
   /** the first turn of a conversation that carries a key: (key, conv_id, turn_idx) */
   type FirstTurn = (String, String, Int)
 
-  /** What a fan-out leaves: the manifest JSON, the input's row total, and
-    * the first turns per (conv_id, key) when the caller asked for them
-    * (empty otherwise). The stats pass counts all three on every call.
-    */
-  final case class Lineage(manifest: String, rows: Long, firstTurns: Seq[FirstTurn])
+  /** What a fan-out leaves: the manifest JSON and the input's row total */
+  final case class Lineage(manifest: String, rows: Long)
 
   /** partition columns of the fan-out write; they also lead its sort */
   private val fanOutPartitionCols = Seq("sink", "bucket")
@@ -236,7 +233,24 @@ object Route {
       yield (plan, rows, sum)
   }
 
-  /** Multi-sink fan-out with per-partition lineage manifest + resume.
+  /** A fan-out whose stats pass has run, waiting for its write: the input's
+    * row total, the first turns per (conv_id, key) when the caller asked for
+    * them (empty otherwise), and the manifest the write will record. `resumed` says the stored manifest already records
+    * this input, plan and width, so the write has nothing to do.
+    */
+  final class FanOut private[Route] (val rows: Long, val firstTurns: Seq[FirstTurn],
+      private[Route] val outDir: String, private[Route] val toWrite: DataFrame,
+      private[Route] val manifest: ObjectNode, private[Route] val resumed: Boolean)
+
+  private def manifestPath(outDir: String) = Paths.get(outDir, "_lineage", "manifest.json")
+
+  /** Multi-sink fan-out with per-partition lineage manifest + resume, in two
+    * halves: this one runs the stats pass, `fanOutWithLineage(fanOut)`
+    * writes. The caller may start other work on the stats (the metrics
+    * sink's domain dimension) before, or while, the write runs. Both halves
+    * keep this name: a job's call site names its launching method, which is
+    * how perfbench attributes the fan-out's two jobs to `route.fanout`.
+    *
     * One salted pass, one write partitioned by (sink, event-day bucket) —
     * content-stable partition keys, not task ids (SURVEY.md §7.4 item 5).
     * The exchange is `partitions` wide (`Pipeline.run` passes the session's
@@ -256,14 +270,11 @@ object Route {
     * `firstTurnsOf` adds the per-(conv_id, key) first-turn family to the
     * stats pass (the metrics sink's domain dimension rides along this way),
     * so a resumed call returns the first turns as well.
-    *
-    * Returns the manifest JSON, the input's row total and those first turns.
     */
   def fanOutWithLineage(routed: DataFrame, outDir: String, partitions: Int,
-      firstTurnsOf: Option[Column] = None): Lineage = {
-    val manifestPath = Paths.get(outDir, "_lineage", "manifest.json")
+      firstTurnsOf: Option[Column] = None): FanOut = {
     val stored: Option[ObjectNode] =
-      try json.readTree(Files.readAllBytes(manifestPath)) match {
+      try json.readTree(Files.readAllBytes(manifestPath(outDir))) match {
         case m: ObjectNode => Some(m)
         case _ => None // empty or not an object: recompute
       } catch { case _: java.io.IOException => None } // missing or malformed
@@ -283,32 +294,42 @@ object Route {
     val stats = groupStats(routed, firstTurnsOf).collect()
     val groups = stats.filterNot(_.getAs[Boolean]("per_conv"))
       .sortBy(r => (r.getAs[String]("sink"), r.getAs[String]("bucket")))
-    val perConv = firstTurns(stats)
     val totalRows = groups.map(_.getAs[Long]("rows")).sum
     val totalChecksum = groups.map(_.getAs[Long]("checksum")).foldLeft(0L)(_ ^ _)
+    val resumed = stored.filter(m => storedInput(m).contains((planFp, totalRows, totalChecksum)))
 
-    stored.filter(m => storedInput(m).contains((planFp, totalRows, totalChecksum))) match {
-      case Some(m) => return Lineage(json.writeValueAsString(m), totalRows, perConv)
-      case None =>
+    val manifest = resumed.getOrElse {
+      val m = json.createObjectNode()
+      m.putObject("input").put("plan", planFp).put("rows", totalRows).put("checksum", totalChecksum)
+      val entries = m.putArray("partitions")
+      groups.foreach { r =>
+        entries.addObject()
+          .put("sink", r.getAs[String]("sink")).put("bucket", r.getAs[String]("bucket"))
+          .put("rows", r.getAs[Long]("rows")).put("checksum", r.getAs[Long]("checksum"))
+          .put("min_turn", r.getAs[Int]("min_turn")).put("max_turn", r.getAs[Int]("max_turn"))
+      }
+      m
     }
+    new FanOut(totalRows, firstTurns(stats), outDir, toWrite, manifest, resumed.isDefined)
+  }
 
-    // a write that dies part-way must not leave the old manifest beside it
-    Files.deleteIfExists(manifestPath)
-    Tables.writer(toWrite).mode(SaveMode.Overwrite)
-      .partitionBy(fanOutPartitionCols: _*)
-      .parquet(outDir + "/data")
-
-    val manifest = json.createObjectNode()
-    manifest.putObject("input")
-      .put("plan", planFp).put("rows", totalRows).put("checksum", totalChecksum)
-    val entries = manifest.putArray("partitions")
-    groups.foreach { r =>
-      entries.addObject()
-        .put("sink", r.getAs[String]("sink")).put("bucket", r.getAs[String]("bucket"))
-        .put("rows", r.getAs[Long]("rows")).put("checksum", r.getAs[Long]("checksum"))
-        .put("min_turn", r.getAs[Int]("min_turn")).put("max_turn", r.getAs[Int]("max_turn"))
-    }
-    Lineage(write(manifestPath, manifest), totalRows, perConv)
+  /** The fan-out's second half: unless the stats pass found the stored
+    * manifest current, removes it, writes `outDir/data` and then the new
+    * manifest.
+    */
+  def fanOutWithLineage(fanOut: FanOut): Lineage = {
+    val path = manifestPath(fanOut.outDir)
+    val text =
+      if (fanOut.resumed) json.writeValueAsString(fanOut.manifest)
+      else {
+        // a write that dies part-way must not leave the old manifest beside it
+        Files.deleteIfExists(path)
+        Tables.writer(fanOut.toWrite).mode(SaveMode.Overwrite)
+          .partitionBy(fanOutPartitionCols: _*)
+          .parquet(fanOut.outDir + "/data")
+        write(path, fanOut.manifest)
+      }
+    Lineage(text, fanOut.rows)
   }
 
   /** writes a manifest, returning its JSON text */

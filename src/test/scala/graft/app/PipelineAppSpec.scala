@@ -3,7 +3,7 @@ package graft.app
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,7 +69,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
         new java.sql.Timestamp(sec * 1000))
     }
     val table = "straggler-local"
-    spark.createDataset(turns).write.mode("overwrite").parquet(Tables.transcriptsPath(table))
+    Tables.writer(spark.createDataset(turns)).mode("overwrite").parquet(Tables.transcriptsPath(table))
     def key(conv: String, mt: Int, k: String, tw: Long) = (conv, mt, Option(k), tw)
     val sinks = Seq(2, 10).map { w =>
       val out = java.nio.file.Files.createTempDirectory(s"graft-arrival-$w").toString
@@ -238,7 +238,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("metrics sink: a conversation with two domains gets a row per domain, ids by first sight") {
-    import graft.operators.{Enrich, Sinks}
+    import graft.operators.{Sinks, TestOps}
     import spark.implicits._
     // generated conversations keep one vhost domain; here every third
     // conversation's odd turns carry a second one (a vhost line swaps its
@@ -254,7 +254,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       t.copy(text = text)
     }
     val table = "two-domain-local"
-    spark.createDataset(turns).write.mode("overwrite").parquet(Tables.transcriptsPath(table))
+    Tables.writer(spark.createDataset(turns)).mode("overwrite").parquet(Tables.transcriptsPath(table))
     val out = java.nio.file.Files.createTempDirectory("graft-two-domains").toString
     Pipeline.run(spark, table, out)
     val cols = Seq("domain_id", "conv_id", "metric_type", "key_value", "time_window", "metric_value")
@@ -262,7 +262,7 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.toSeq).toSeq
 
     val parsed = ParseStage.parse(Tables.transcripts(spark, table))
-    val joined = Enrich.withDomainId(parsed).select("conv_id", "domain_id").distinct()
+    val joined = TestOps.withDomainId(parsed).select("conv_id", "domain_id").distinct()
     val twoDomainConvs = joined.groupBy("conv_id").count().filter(col("count") > 1).count()
     assert(twoDomainConvs > 10, s"$twoDomainConvs conversations with two domains")
     val expected = Sinks.withDomainRows(Aggregates.metricRows(parsed), joined)
@@ -365,10 +365,10 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("accumulate metrics (ReplaceExistingMetrics=false) sums across runs (mysqldb.go:147-151)") {
-    import graft.operators.{Aggregates, Enrich, Sinks}
+    import graft.operators.{Aggregates, Sinks, TestOps}
     import spark.implicits._
     val parsed = ParseStage.parse(spark.createDataset(Tables.localTurns(2000)).toDF())
-    val dim = Enrich.withDomainId(parsed).select("conv_id", "domain_id").distinct()
+    val dim = TestOps.withDomainId(parsed).select("conv_id", "domain_id").distinct()
     def metricsOf(df: org.apache.spark.sql.DataFrame) = Aggregates.metricRows(df)
     val halfA = parsed.filter(col("turn_idx") % 2 === 0)
     val halfB = parsed.filter(col("turn_idx") % 2 =!= 0)
@@ -396,10 +396,10 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("accumulate swap crash recovery: an orphaned ._backup is restored, not dropped") {
-    import graft.operators.{Aggregates, Enrich, Sinks}
+    import graft.operators.{Aggregates, Sinks, TestOps}
     import spark.implicits._
     val parsed = ParseStage.parse(spark.createDataset(Tables.localTurns(2000)).toDF())
-    val dim = Enrich.withDomainId(parsed).select("conv_id", "domain_id").distinct()
+    val dim = TestOps.withDomainId(parsed).select("conv_id", "domain_id").distinct()
     def metricsOf(df: org.apache.spark.sql.DataFrame) = Aggregates.metricRows(df)
     val halfA = parsed.filter(col("turn_idx") % 2 === 0)
     val halfB = parsed.filter(col("turn_idx") % 2 =!= 0)
@@ -456,6 +456,51 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       .select(col("ua_string").cast("binary")).collect()(0)
     assert(m.getAs[Array[Byte]](0).toSeq ==
       (euros + "tail").getBytes("UTF-8").takeRight(100).toSeq)
+  }
+
+  test("a run's sink jobs overlap: jobs of two sinks run at the same moment, still at most 11 jobs") {
+    // a job belongs to the root SQL execution of the action that launched
+    // it. Each sink's actions run one after another (the fan-out's stats
+    // pass, then its write), so jobs of two root executions that run at
+    // the same moment are jobs of two sinks
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(e.jobId, (e.properties.getProperty("spark.sql.execution.root.id"), e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, sf, java.nio.file.Files.createTempDirectory("graft-overlap").toString)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val jobs = started.asScala.toSeq.map { case (id, (root, t0)) => (root, t0, ended.get(id)) }
+    val overlapping = for {
+      (a, a0, a1) <- jobs; (b, b0, b1) <- jobs
+      if a != b && a0 < b1 && b0 < a1
+    } yield (a, b)
+    assert(overlapping.nonEmpty, jobs.sortBy(_._2).mkString("\n"))
+    assert(jobs.size <= 11, s"${jobs.size} jobs")
+  }
+
+  test("one failing sink fails the run with its own exception, leaving no job or pool thread behind") {
+    val out = java.nio.file.Files.createTempDirectory("graft-failing").toString
+    // a regular file where routed/ goes: the fan-out's stats pass runs, then
+    // removing the old manifest throws while the other sinks are running
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "routed"), "")
+    val e = intercept[java.nio.file.FileSystemException](Pipeline.run(spark, sf, out))
+    assert(e.getReason == "Not a directory", e)
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    val poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "pipeline-sinks")
+    poolThreads.foreach(_.join(10000))
+    assert(!poolThreads.exists(_.isAlive), poolThreads)
+    val next = Pipeline.run(spark, sf, java.nio.file.Files.createTempDirectory("graft-after-failure").toString)
+    assert(next.rows == 6000) // sf0.001 turns
   }
 
   // last in the suite: starting JFR in a running JVM instruments the JDK's

@@ -22,7 +22,7 @@ object LineageRerun {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     })
-    Route.fanOutWithLineage(routed, args(1), partitions = args(2).toInt)
+    TestOps.fanOut(routed, args(1), partitions = args(2).toInt)
     TestBus.drain(spark.sparkContext)
     println(s"jobs=${jobs.get}")
     spark.stop()

@@ -149,7 +149,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val roleIds = enriched.select("role", "role_id").distinct().collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(roleIds.size == roleIds.values.toSet.size) // ids unique
-    val domains = Enrich.withDomainId(parsedDf)
+    val domains = TestOps.withDomainId(parsedDf)
     assert(domains.count() == N)
     assert(domains.filter(col("domain_id").isNull).count() == 0)
     // J2: empty parsed domain falls back to the configured default
@@ -201,9 +201,9 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   test("lineage fan-out is resumable: second call is a no-op with identical manifest") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lineage").toString
     val routed = Route.withSink(parsedDf)
-    val m1 = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val m1 = TestOps.fanOut(routed, dir, partitions = 8)
     val files1 = new java.io.File(dir + "/data").listFiles().map(_.getName).toSet
-    val m2 = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val m2 = TestOps.fanOut(routed, dir, partitions = 8)
     assert(m1 == m2)
     val files2 = new java.io.File(dir + "/data").listFiles().map(_.getName).toSet
     assert(files1 == files2)
@@ -214,24 +214,24 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-lineage-torn").toString
     val routed = Route.withSink(ParseStage.parse(
       graft.sources.Tables.transcripts(spark, "sf0.001")))
-    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val first = TestOps.fanOut(routed, dir, partitions = 8)
     assert(first.rows == 6000L) // sf0.001 turns
     // keeps the manifest's opening brace, loses the rest
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_lineage", "manifest.json"),
       first.manifest.take(first.manifest.indexOf("\"input\":")))
-    assert(Route.fanOutWithLineage(routed, dir, partitions = 8) == first)
+    assert(TestOps.fanOut(routed, dir, partitions = 8) == first)
   }
 
   test("a manifest whose input fingerprint is malformed is recomputed, not served") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lineage-bad-input").toString
     val routed = Route.withSink(ParseStage.parse(
       graft.sources.Tables.transcripts(spark, "sf0.001")))
-    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val first = TestOps.fanOut(routed, dir, partitions = 8)
     // "plan" and "rows" still read; the checksum does not
     val bad = first.manifest.replaceFirst("(\"input\":\\{[^}]*\"checksum\":)-?\\d+", "$1\"x\"")
     assert(bad != first.manifest)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_lineage", "manifest.json"), bad)
-    assert(Route.fanOutWithLineage(routed, dir, partitions = 8) == first)
+    assert(TestOps.fanOut(routed, dir, partitions = 8) == first)
   }
 
   test("no manifest exists while the fan-out rewrites routed/data") {
@@ -240,7 +240,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-lineage-rewrite").toString
     val routed = Route.withSink(ParseStage.parse(
       graft.sources.Tables.transcripts(spark, "sf0.001")))
-    val first = Route.fanOutWithLineage(routed, dir, partitions = 8)
+    val first = TestOps.fanOut(routed, dir, partitions = 8)
     val manifest = s"$dir/_lineage/manifest.json"
     // a changed plan, so the call rewrites; the probe runs in the write's
     // tasks only (the stats pass does not read the column)
@@ -249,7 +249,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(manifest))) seen.add(1)
       0
     }
-    val second = Route.fanOutWithLineage(routed.withColumn("probe", probe(col("text"))), dir, partitions = 8)
+    val second = TestOps.fanOut(routed.withColumn("probe", probe(col("text"))), dir, partitions = 8)
     assert(second.rows == first.rows && second.manifest != first.manifest)
     assert(seen.value == 0, s"the manifest existed for ${seen.value} written rows")
   }
@@ -258,7 +258,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("graft-lineage-jvm").toString
     val routed = Route.withSink(ParseStage.parse(graft.sources.Tables.transcripts(spark, "sf0.001")))
-    Route.fanOutWithLineage(routed, dir, partitions = 8)
+    TestOps.fanOut(routed, dir, partitions = 8)
     def files(): Map[String, (Long, Long)] = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
@@ -277,7 +277,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     org.apache.spark.graft.TestBus.drain(sc)
     sc.addSparkListener(listener)
     try {
-      Route.fanOutWithLineage(routed, dir, partitions = 8)
+      TestOps.fanOut(routed, dir, partitions = 8)
       org.apache.spark.graft.TestBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     // the same test classpath and JVM options, a smaller heap
@@ -306,21 +306,21 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       val dir = java.nio.file.Files.createTempDirectory("graft-lineage2").toString
       val fileParsed = ParseStage.parse(
         graft.sources.Tables.transcripts(spark, "/root/testdata/sf0.001"))
-      Route.fanOutWithLineage(Route.withSink(fileParsed), dir, partitions = 8)
+      TestOps.fanOut(Route.withSink(fileParsed), dir, partitions = 8)
       Thread.sleep(500) // listener events are posted asynchronously
       // one collect (stats+fingerprint folded together) + one write
       assert(executed.get <= 2, s"expected <=2 executions over the input, got ${executed.get}")
       // rerun over identical input: the stats pass matches the manifest,
       // so the write is skipped
       executed.set(0)
-      Route.fanOutWithLineage(Route.withSink(fileParsed), dir, partitions = 8)
+      TestOps.fanOut(Route.withSink(fileParsed), dir, partitions = 8)
       Thread.sleep(500)
       assert(executed.get == 1, s"same-files rerun must run the stats pass only, got ${executed.get}")
       // a CHANGED PIPELINE over the same input must NOT resume (code-review
       // r5: the input fingerprint covers the plan and the partitions
       // argument, not just the input's rows and checksum)
       executed.set(0)
-      Route.fanOutWithLineage(Route.withSink(fileParsed), dir, partitions = 4)
+      TestOps.fanOut(Route.withSink(fileParsed), dir, partitions = 4)
       Thread.sleep(500)
       // ADVICE r5 (medium): must take BOTH the stats pass AND the write —
       // matching on input rows/checksum alone used to skip the rewrite and
@@ -329,7 +329,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         s"changed partitions must re-run stats AND rewrite, got ${executed.get}")
       // ...and the rewritten manifest now resumes again
       executed.set(0)
-      Route.fanOutWithLineage(Route.withSink(fileParsed), dir, partitions = 4)
+      TestOps.fanOut(Route.withSink(fileParsed), dir, partitions = 4)
       Thread.sleep(500)
       assert(executed.get == 1, s"post-rewrite rerun must run the stats pass only, got ${executed.get}")
     } finally spark.listenerManager.unregister(listener)

@@ -186,7 +186,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     try {
       val dir = java.nio.file.Files.createTempDirectory("graft-fanout-plan").toString
       val parsed = ParseStage.parse(graft.sources.Tables.transcripts(spark, sf))
-      Route.fanOutWithLineage(Route.withSink(parsed), dir, partitions = 4)
+      TestOps.fanOut(Route.withSink(parsed), dir, partitions = 4)
       org.apache.spark.graft.TestBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(writePlans.size == 1)

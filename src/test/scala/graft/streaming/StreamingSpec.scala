@@ -15,7 +15,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   private lazy val dir = {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    spark.createDataset(Tables.localTurns(2000)).write.mode("overwrite").parquet(d)
+    Tables.writer(spark.createDataset(Tables.localTurns(2000))).mode("overwrite").parquet(d)
     d
   }
 
@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     def addFile(name: String, rows: Seq[graft.model.TranscriptTurn]): Unit = {
       val tmp = java.nio.file.Files.createTempDirectory("graft-rotate-part").toString
-      spark.createDataset(rows).coalesce(1).write.mode("overwrite").parquet(tmp)
+      Tables.writer(spark.createDataset(rows).coalesce(1)).mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, name))
@@ -105,10 +105,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // metric increments into the DB (ReplaceExistingMetrics=false,
     // mysqldb.go:147-151). Spark shape: foreachBatch → read-merge-write.
     // Contract: after N micro-batches the sink equals one batch recompute.
-    import graft.operators.{Aggregates, Enrich, Sinks}
+    import graft.operators.{Aggregates, Sinks, TestOps}
     val out = java.nio.file.Files.createTempDirectory("graft-stream-acc").toString + "/metrics"
     val batchParsed = ParseStage.parse(spark.read.parquet(dir))
-    val dim = Enrich.withDomainId(batchParsed).select("conv_id", "domain_id").distinct()
+    val dim = TestOps.withDomainId(batchParsed).select("conv_id", "domain_id").distinct()
       .collect() // freeze the dimension so every micro-batch maps ids identically
     val dimDf = spark.createDataFrame(
       spark.sparkContext.parallelize(dim.toIndexedSeq),
