@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 
 import graft.app.OracleSql
 import graft.operators._
@@ -230,28 +229,17 @@ object SparkEntry {
       .withColumn("request_ts", unix_timestamp(col("request_ts")))
       .withColumn("client_ip_hex", hex(col("client_ip_bin"))).drop("client_ip_bin")),
 
-    // R6: counter-report-shaped aggregate — per-dimension top-10 shrink
-    // (A4/A5) via the two-stage bounded-heap aggregate + the six grand
-    // totals as a '_totals' dimension (counter.go:326-445). The 10
-    // smallest (-cnt, key): cnt descending, then key ascending with the null
-    // key first, in UTF-8 byte order
+    // R6: counter-report-shaped aggregate — COUNTER's own report rows
+    // (Aggregates.counterTopN: per-dimension top-10 shrink, A4/A5) with the
+    // six grand totals as a '_totals' dimension of rank 0
+    // (counter.go:326-445); total_requests repeats handled_entries
     "r6_counter_report" -> ((s, d) => {
-      val p = parsed(s, d)
-      val topPerDim = Aggregates.keyedCounts(p)
-        .groupBy(col("dim"))
-        .agg(Bridge.collectTopK(struct((-col("cnt")).as("neg_cnt"), col("key")), 10,
-          smallest = true).as("top"))
-        .select(col("dim"), posexplode(col("top")).as(Seq("pos", "e")))
-        .select(col("dim"), col("e.key").as("key"), (-col("e.neg_cnt")).as("cnt"),
-          (col("pos") + 1).cast("int").as("rank"))
-      val totalNames = Seq("handled_entries", "total_requests", "total_bytes",
-        "humans", "non_humans", "malicious_requests")
-      val totalsLong = Aggregates.totals(p)
-        .select(explode(array(totalNames.map(n =>
-          struct(lit(n).as("key"), col(n).cast("long").as("cnt"))): _*)).as("e"))
-        .select(lit("_totals").as("dim"), col("e.key").as("key"), col("e.cnt").as("cnt"),
-          lit(0).as("rank"))
-      topPerDim.unionByName(totalsLong)
+      val isTotal = col("dim") === Aggregates.TotalsDim
+      Aggregates.counterTopN(Aggregates.counterCounts(parsed(s, d)), 10)
+        .select(col("dim"),
+          explode(when(isTotal && col("key") === "handled_entries",
+            array(col("key"), lit("total_requests"))).otherwise(array(col("key")))).as("key"),
+          col("cnt"), when(isTotal, 0).otherwise(col("rank")).as("rank"))
     }),
 
     // S3: start-offset — skip the first N turns per conversation before

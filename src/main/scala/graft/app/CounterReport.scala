@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.operators.Aggregates
 
@@ -11,47 +12,49 @@ import graft.operators.Aggregates
   * dimension (A4), empty keys rendered "-not set-", label width clamped
   * 10..15 (counter.go:395-445).
   *
-  * Report layer: operates on collected aggregate rows (tiny), not a Spark
-  * operator.
+  * Report layer: the ranking runs on the executors (`Aggregates.counterTopN`);
+  * this object collects and prints its rows.
   */
 object CounterReport {
 
-  final case class Snapshot(
-      totals: Map[String, Long],
-      keyed: Map[String, Map[String, Long]])
-
-  /** collect a snapshot from a parsed DF: one pass, one small collect.
-    * Empty input gives all-zero totals and no keyed dimensions.
+  /** One report's rows: the totals by `Aggregates.counterCounts` name, and
+    * the top `n` (key, count) pairs of each keyed dimension, best first.
     */
-  def snapshot(parsed: DataFrame): Snapshot = {
-    val (totalRows, keyedRows) = Aggregates.counterCounts(parsed).collect()
-      .partition(_.getString(0) == Aggregates.TotalsDim)
-    val t = totalRows.map(r => r.getString(1) -> r.getLong(2)).toMap.withDefaultValue(0L)
-    val totals = Map(
-      "Total log lines" -> t("handled_entries"),
-      "Total requests" -> t("handled_entries"),
-      "Total bytes sent" -> t("total_bytes"),
-      "Requests by humans" -> t("humans"),
-      "Requests by non-humans" -> t("non_humans"),
-      "Malicious requests" -> t("malicious_requests"))
-    val keyed = keyedRows
-      .groupBy(_.getString(0))
-      .map { case (dim, rows) =>
-        dim -> rows.map(r => Option(r.getString(1)).getOrElse("") -> r.getLong(2)).toMap
-      }
-    Snapshot(totals, keyed)
-  }
+  final case class Snapshot(
+      n: Int,
+      totals: Map[String, Long],
+      keyed: Map[String, Seq[(Option[String], Long)]])
 
-  /** fold two snapshots (streaming ticks accumulate micro-batches) */
-  def merge(a: Snapshot, b: Snapshot): Snapshot = Snapshot(
-    totals = (a.totals.keySet ++ b.totals.keySet).iterator
-      .map(k => k -> (a.totals.getOrElse(k, 0L) + b.totals.getOrElse(k, 0L))).toMap,
-    keyed = (a.keyed.keySet ++ b.keyed.keySet).iterator.map { d =>
-      val ma = a.keyed.getOrElse(d, Map.empty[String, Long])
-      val mb = b.keyed.getOrElse(d, Map.empty[String, Long])
-      d -> (ma.keySet ++ mb.keySet).iterator
-        .map(k => k -> (ma.getOrElse(k, 0L) + mb.getOrElse(k, 0L))).toMap
-    }.toMap)
+  /** collect a snapshot from a parsed DF: one pass, one collect of at most
+    * 9·n keyed rows plus the totals. `prev`'s rows fold into this one's
+    * counts first, so a streaming tick keeps only the top n keys of each
+    * dimension between ticks, as the reference's ShrinkCounterMapLeavingTopN
+    * does (counter.go:286-324): its totals stay exact and its keyed counts
+    * are an approximate top n. Empty input gives all-zero totals and no
+    * keyed dimensions.
+    */
+  def snapshot(parsed: DataFrame, n: Int = 10, prev: Option[Snapshot] = None): Snapshot = {
+    val counts = Aggregates.counterCounts(parsed)
+    val folded = prev.fold(counts) { p =>
+      val spark = parsed.sparkSession
+      import spark.implicits._
+      val kept = p.totals.toSeq.map { case (k, v) => (Aggregates.TotalsDim, Option(k), v) } ++
+        p.keyed.toSeq.flatMap { case (dim, top) => top.map { case (k, v) => (dim, k, v) } }
+      counts.unionByName(kept.toDF("dim", "key", "cnt"))
+        .groupBy("dim", "key").agg(sum(col("cnt")).as("cnt"))
+    }
+    val (totalRows, keyedRows) = Aggregates.counterTopN(folded, n).collect()
+      .partition(_.getString(0) == Aggregates.TotalsDim)
+    // rows arrive best first within each dimension; every dimension has a
+    // section, maybe empty, whenever any line was counted
+    val byDim = keyedRows.toSeq.groupBy(_.getString(0))
+    val keyed =
+      if (totalRows.isEmpty) Map.empty[String, Seq[(Option[String], Long)]]
+      else Aggregates.counterDims.map { case (dim, _) =>
+        dim -> byDim.getOrElse(dim, Nil).map(r => Option(r.getString(1)) -> r.getLong(2))
+      }.toMap
+    Snapshot(n, totalRows.map(r => r.getString(1) -> r.getLong(2)).toMap, keyed)
+  }
 
   private def clampLabel(s: String): String = {
     val shown = if (s.isEmpty) "-not set-" else s
@@ -59,23 +62,23 @@ object CounterReport {
     if (shown.length > 15) shown.take(15) else shown.padTo(w, ' ')
   }
 
-  /** top-N by count with deterministic tie-break (key asc) — documented
-    * divergence from the reference's Go-map-iteration ties (A4)
-    */
-  def topN(m: Map[String, Long], n: Int): Seq[(String, Long)] =
-    m.toSeq.sortBy { case (k, v) => (-v, k) }.take(n)
+  /** report label → `Aggregates.counterCounts` total */
+  private val totalLines = Seq(
+    "Total log lines" -> "handled_entries",
+    "Total requests" -> "handled_entries",
+    "Total bytes sent" -> "total_bytes",
+    "Requests by humans" -> "humans",
+    "Requests by non-humans" -> "non_humans",
+    "Malicious requests" -> "malicious_requests")
 
-  def format(cur: Snapshot, prev: Option[Snapshot], topNSize: Int = 10,
-      nowUtc: String = ""): String = {
+  def format(cur: Snapshot, prev: Option[Snapshot], nowUtc: String = ""): String = {
     val sb = new StringBuilder
     sb.append(s"---------$nowUtc---------\n")
-    val totalOrder = Seq("Total log lines", "Total requests", "Total bytes sent",
-      "Requests by humans", "Requests by non-humans", "Malicious requests")
-    totalOrder.foreach { k =>
-      val v = cur.totals(k)
+    totalLines.foreach { case (k, name) =>
+      val v = cur.totals.getOrElse(name, 0L)
       prev match {
         case Some(p) =>
-          val d = v - p.totals.getOrElse(k, 0L)
+          val d = v - p.totals.getOrElse(name, 0L)
           sb.append(f"$k%-22s: $v%d (${if (d >= 0) "+" else ""}$d%d)\n")
         case None =>
           sb.append(f"$k%-22s: $v%d\n")
@@ -84,12 +87,13 @@ object CounterReport {
     val dimOrder = Seq("status", "method", "client_ip", "ua_family", "os_family",
       "device_type", "intent", "referer", "path")
     dimOrder.foreach { dim =>
-      cur.keyed.get(dim).foreach { m =>
-        sb.append(s"--- $dim (top $topNSize) ---\n")
-        topN(m, topNSize).foreach { case (k, v) =>
-          val d = prev.flatMap(_.keyed.get(dim)).map(pm => v - pm.getOrElse(k, 0L))
+      cur.keyed.get(dim).foreach { top =>
+        sb.append(s"--- $dim (top ${cur.n}) ---\n")
+        val before = prev.flatMap(_.keyed.get(dim)).map(_.toMap)
+        top.foreach { case (k, v) =>
+          val d = before.map(pm => v - pm.getOrElse(k, 0L))
           val delta = d.map(x => s" (${if (x >= 0) "+" else ""}$x)").getOrElse("")
-          sb.append(s"${clampLabel(k)} : $v$delta\n")
+          sb.append(s"${clampLabel(k.getOrElse(""))} : $v$delta\n")
         }
       }
     }

@@ -175,8 +175,8 @@ object Pipeline {
         lineage = Route.fanOutWithLineage(fanOut)
       }),
       Option.when(cfg.handlers.contains("COUNTER"))("counter" -> { () =>
-        report = CounterReport.format(CounterReport.snapshot(parsed), None,
-          cfg.counterTopNForKeyedMetrics)
+        report = CounterReport.format(
+          CounterReport.snapshot(parsed, cfg.counterTopNForKeyedMetrics), None)
       }),
       Option.when(metrics)("metrics" -> { () =>
         val metricRows: DataFrame =
@@ -211,13 +211,13 @@ object Pipeline {
     // multi-source config carries one (ADVICE r2: previously parsed and
     // discarded), falling back to the source config's host id.
     val (up, mem) = graft.metrics.OsMetrics.liveSnapshot()
-    val jm = s"""{"rows":$rows,"host_id":${osCfg.getOrElse(cfg).hostId}""" +
-      up.map(u => s""","up_minutes":${u.upDurationMinutes},"load1":"${u.load1}"""").getOrElse("") +
-      mem.map(m => s""","mem_use":${m.memUse},"mem_available":${m.memAvailable}""").getOrElse("") +
-      "}"
+    val jm = JobConfig.mapper.createObjectNode()
+      .put("rows", rows).put("host_id", osCfg.getOrElse(cfg).hostId)
+    up.foreach(u => jm.put("up_minutes", u.upDurationMinutes).put("load1", u.load1))
+    mem.foreach(m => jm.put("mem_use", m.memUse).put("mem_available", m.memAvailable))
     val mp = java.nio.file.Paths.get(outDir, "_metrics", "job_metrics.json")
     java.nio.file.Files.createDirectories(mp.getParent)
-    java.nio.file.Files.writeString(mp, jm)
+    JobConfig.mapper.writeValue(mp.toFile, jm)
 
     Result(lineage.manifest, report, rows)
   }

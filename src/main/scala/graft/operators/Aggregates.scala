@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.model.MetricType
 
@@ -50,31 +51,58 @@ object Aggregates {
   /** dim label under which `counterCounts` reports the A1 totals */
   val TotalsDim = "_totals"
 
+  /** the A1 totals `counterCounts` reports under `TotalsDim`, by `totals`'
+    * column name, with each row's increment (total_requests equals
+    * handled_entries, so only the latter is counted)
+    */
+  private def counterTotals: Seq[(String, Column)] = Seq(
+    "handled_entries" -> lit(1L),
+    "total_bytes" -> col("bytes_sent"),
+    "humans" -> when(col("ua_human") === "Human", 1L).otherwise(0L),
+    "non_humans" -> when(col("ua_human") === "NonHuman", 1L).otherwise(0L),
+    "malicious_requests" -> when(col("malicious") =!= 0, 1L).otherwise(0L))
+
   /** A1 + A2 fused for the COUNTER handler: the totals and the 9 keyed
     * dimensions as one long (dim, key, cnt) table from one explode and ONE
-    * hash aggregate. Totals come under `TotalsDim`, keyed by `totals`'
-    * column names (total_requests equals handled_entries, so only the
-    * latter is emitted); a total nothing counted toward is absent, and
-    * every sum is coalesced, so empty input yields no NULL.
+    * hash aggregate. Every row counts toward every total, so each total is
+    * present whenever the input has a row; every sum is coalesced, so no
+    * total is NULL.
     */
   def counterCounts(parsed: DataFrame): DataFrame = {
     def entry(dim: String, key: Column, inc: Column): Column =
       struct(lit(dim).as("dim"), key.cast("string").as("key"), inc.cast("long").as("inc"))
-    def total(name: String, inc: Column): Column = entry(TotalsDim, lit(name), inc)
-    val entries = counterDims.map { case (dim, c) => entry(dim, col(c), lit(1L)) } ++ Seq(
-      total("handled_entries", lit(1L)),
-      total("total_bytes", col("bytes_sent")),
-      when(col("ua_human") === "Human", total("humans", lit(1L))),
-      when(col("ua_human") === "NonHuman", total("non_humans", lit(1L))),
-      when(col("malicious") =!= 0, total("malicious_requests", lit(1L))))
-    // null entries (unsatisfied `when`s) are dropped after the explode, as
-    // in metricRows
+    val entries = counterDims.map { case (dim, c) => entry(dim, col(c), lit(1L)) } ++
+      counterTotals.map { case (name, inc) => entry(TotalsDim, lit(name), inc) }
     parsed
       .select(explode(array(entries: _*)).as("e"))
-      .filter(col("e").isNotNull)
       .groupBy(col("e.dim").as("dim"), col("e.key").as("key"))
       .agg(coalesce(sum(col("e.inc")), lit(0L)).as("cnt"))
   }
+
+  /** A4/A5 COUNTER report rows from (dim, key, cnt) counts: each keyed
+    * dimension's top `n` keys, plus the `TotalsDim` rows whole, as (dim,
+    * key, cnt, rank) with rank 1 the best of its dimension. Ranked by cnt
+    * descending, then key in Spark's string order (UTF-8 bytes) with the
+    * null key first — a deterministic stand-in for the reference's Go map
+    * iteration order on ties (counter.go:286-324, SURVEY.md §2 A4).
+    *
+    * Catalyst's `collect_top_k` ranks on the executors, holding at most
+    * max(n, #totals) rows per dimension. It reads the counts through
+    * `coalesce(1)`, a narrow merge of their partitions into one task, not
+    * through an exchange on dim: under AQE every exchange is one more job.
+    * So the ranking runs in the task that finishes the counts' own
+    * aggregate, partition by partition, which AQE already coalesces to one
+    * task when the counts are small.
+    */
+  def counterTopN(counts: DataFrame, n: Int): DataFrame =
+    counts.coalesce(1)
+      .groupBy(col("dim"))
+      .agg(Bridge.collectTopK(struct((-col("cnt")).as("neg_cnt"), col("key")),
+        math.max(n, counterTotals.size), smallest = true).as("top"))
+      .select(col("dim"), posexplode(col("top")).as(Seq("pos", "e")))
+      .filter(col("dim") === TotalsDim || col("pos") < n)
+      .select(col("dim"), col("e.key").as("key"), (-col("e.neg_cnt")).as("cnt"),
+        (col("pos") + 1).as("rank"))
 
   /** A4 top-N per dimension with a deterministic tie-break (key asc) — the
     * reference breaks ties by Go map iteration order, i.e. nondeterminism we

@@ -102,57 +102,29 @@ object Similarity {
     *     queries.limit(cap + 1) where cap = threshold / perRow, so the scan
     *     stops as soon as the answer is determined; perRow is the actual
     *     first-row vector width padded for broadcast hash-relation overhead
-    *     (+32 B/row). The verdict is MEMOIZED per (semantic plan hash,
-    *     threshold), so repeated ANN calls over the same query set fire no
-    *     further jobs (a stale-free memo: same semantic plan ⇒ same source
-    *     data within a session; a hash collision could only reuse the other
-    *     plan's verdict — both paths return identical results, so the blast
-    *     radius is plan choice, never correctness).
+    *     (+32 B/row). Each call measures anew: a plan does not identify
+    *     its data, since a path rewritten in the same session reads back
+    *     under an equal plan.
     * Re-ranking runs with small query sets broadcast and probe their
     * buckets locally; a batch-ANN run whose query set genuinely exceeds
     * the threshold (e.g. 10⁸ queries) falls back to shuffled equi-joins on
     * the bucket key — same results, no broadcast OOM. Callers can force
     * either path via the explicit parameter.
     */
-  // memo keys are the CANONICALIZED PLAN OBJECT (structural equality), not
-  // its 32-bit semanticHash: an Int collision between two different plans
-  // would silently serve one plan's verdict/centroids for the other
-  // (code-review r5) — for centroids that is a result-correctness hole, so
-  // both memos key on the plan itself; bounded by clear-on-overflow.
-  private val memoCap = 256
-
-  /** Evict ONE (arbitrary) entry at cap instead of clear-all (VERDICT r5
-    * item 5): a long-lived session alternating >cap plans no longer forgets
-    * the other 255 entries wholesale — in the centroid memo those are
-    * exactly the expensive thing the memo exists to keep.
-    */
-  private[operators] def evictOne(m: java.util.concurrent.ConcurrentHashMap[_, _]): Unit = {
-    val it = m.keySet().iterator()
-    if (it.hasNext) { it.next(); it.remove() }
-  }
-
-  private val broadcastDecisionMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Any, Long), java.lang.Boolean]()
-
   private def shouldBroadcastQueries(queries: DataFrame): Boolean = {
     val threshold = queries.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold <= 0) return false
     if (queries.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold) return true
-    if (broadcastDecisionMemo.size > memoCap) evictOne(broadcastDecisionMemo)
-    val memoKey = (queries.queryExecution.analyzed.canonicalized, threshold)
-    broadcastDecisionMemo.computeIfAbsent(memoKey, { _ =>
-      val firstVec = queries.select(col("embedding")).head(1)
-      if (firstVec.isEmpty) java.lang.Boolean.TRUE
-      else {
-        // id + array overhead + floats, padded for hash-relation overhead
-        val perRow = 64L + 4L * firstVec(0).getSeq[Float](0).length
-        // cap = the largest row count that still fits the threshold; the
-        // LIMIT asks for cap+1 rows so exceeding the cap is detectable
-        val cap = threshold / perRow
-        val capInt = math.min(cap + 1, Int.MaxValue.toLong).toInt
-        java.lang.Boolean.valueOf(queries.limit(capInt).count() <= cap)
-      }
-    })
+    val firstVec = queries.select(col("embedding")).head(1)
+    firstVec.isEmpty || {
+      // id + array overhead + floats, padded for hash-relation overhead
+      val perRow = 64L + 4L * firstVec(0).getSeq[Float](0).length
+      // cap = the largest row count that still fits the threshold; the
+      // LIMIT asks for cap+1 rows so exceeding the cap is detectable
+      val cap = threshold / perRow
+      val capInt = math.min(cap + 1, Int.MaxValue.toLong).toInt
+      queries.limit(capInt).count() <= cap
+    }
   }
 
   private def maybeBroadcast(df: DataFrame, bcast: Boolean): DataFrame =
@@ -207,29 +179,12 @@ object Similarity {
     * the centroids are bit-reproducible across sessions/partitionings (a
     * distributed double-sum is not: partial-aggregation order varies). The
     * sample-trained coarse quantizer is standard IVF practice; everything
-    * per-row (assignment, probing, rescoring) is distributed.
+    * per-row (assignment, probing, rescoring) is distributed. Every call
+    * trains; a stored index keeps its trained centroids instead (SigTables'
+    * pinned centroids, `ivfTopKPreassigned`).
     */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Any, Int, Int, Int), Array[Array[Float]]]()
-
   def kmeansCentroids(emb: DataFrame, k: Int = 16, iters: Int = 4,
       sampleLimit: Int = 100000): Array[Array[Float]] = {
-    // The coarse quantizer IS the IVF index: train once per (corpus, params)
-    // and reuse across calls — re-training per query call cost 26.6 s/call
-    // at a 200k corpus in the r5 scale sweep (sample collect + driver Lloyd
-    // dominate) vs ~1.5 s steady-state with the memo. Deterministic
-    // training (stable vec_id order, pure scalar arithmetic) makes the memo
-    // value-transparent: a recompute would return bit-identical centroids.
-    // Keyed on the canonicalized plan OBJECT, not its Int hash — see the
-    // memo note above shouldBroadcastQueries.
-    if (centroidMemo.size > memoCap) evictOne(centroidMemo)
-    centroidMemo.computeIfAbsent(
-      (emb.queryExecution.analyzed.canonicalized, k, iters, sampleLimit),
-      _ => trainCentroids(emb, k, iters, sampleLimit))
-  }
-
-  private def trainCentroids(emb: DataFrame, k: Int, iters: Int,
-      sampleLimit: Int): Array[Array[Float]] = {
     val sample = emb.orderBy("vec_id").limit(sampleLimit)
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)

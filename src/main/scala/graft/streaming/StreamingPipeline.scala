@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.app.CounterReport
 import graft.operators.ParseStage
 import graft.sources.Tables
 
@@ -30,22 +31,23 @@ object StreamingPipeline {
   }
 
   /** A3 processing-time counter tick in streaming mode (counter.go:241-253):
-    * each micro-batch folds into a running snapshot held on the driver (the
-    * reference holds its counters in process memory the same way), and a
+    * each micro-batch's counts fold into the previous tick's snapshot, which
+    * the driver keeps like the reference keeps its counters in process
+    * memory: the totals, and the top `topN` keys per dimension that the
+    * reference's ShrinkCounterMapLeavingTopN leaves (counter.go:286-324). A
     * report with (+delta) vs the PREVIOUS tick is emitted per batch — the
     * CounterValue.PreviousValue snapshot semantics (counter.go:49-56).
     * Returns the started query; stop it to end ticking.
     */
   def counterTicks(stream: DataFrame, onReport: String => Unit,
       topN: Int = 10): org.apache.spark.sql.streaming.StreamingQuery = {
-    var acc: Option[graft.app.CounterReport.Snapshot] = None
+    var acc: Option[CounterReport.Snapshot] = None
     stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val snap = graft.app.CounterReport.snapshot(ParseStage.parse(batch))
-        val merged = acc.map(a => graft.app.CounterReport.merge(a, snap)).getOrElse(snap)
-        onReport(graft.app.CounterReport.format(merged, acc, topN))
-        acc = Some(merged)
+        val snap = CounterReport.snapshot(ParseStage.parse(batch), topN, acc)
+        onReport(CounterReport.format(snap, acc))
+        acc = Some(snap)
       }
       .start()
   }

@@ -299,13 +299,56 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val p1 = ParseStage.parse(spark.createDataset(Tables.localTurns(500)).toDF())
     val p2 = ParseStage.parse(spark.createDataset(Tables.localTurns(1000)).toDF())
-    val s1 = CounterReport.snapshot(p1)
-    val s2 = CounterReport.snapshot(p2)
-    val rep = CounterReport.format(s2, Some(s1), 5, "2026-01-01T00:00:00Z")
+    val s1 = CounterReport.snapshot(p1, 5)
+    val s2 = CounterReport.snapshot(p2, 5)
+    val rep = CounterReport.format(s2, Some(s1), "2026-01-01T00:00:00Z")
     assert(rep.contains("(+")) // deltas rendered
     assert(rep.contains("Total log lines"))
-    val noDelta = CounterReport.format(s2, None, 5)
+    val noDelta = CounterReport.format(s2, None)
     assert(!noDelta.contains("(+"))
+  }
+
+  test("COUNTER with N = 1 and N = 0: all six total lines, every dimension's header, N keys each") {
+    import spark.implicits._
+    val p = ParseStage.parse(spark.createDataset(Tables.localTurns(500)).toDF())
+    Seq(1, 0).foreach { n =>
+      val rep = CounterReport.format(CounterReport.snapshot(p, n), None)
+      Seq("Total log lines", "Total requests", "Total bytes sent", "Requests by humans",
+        "Requests by non-humans", "Malicious requests").foreach { k =>
+        assert(rep.linesIterator.count(_.startsWith(k)) == 1, rep)
+      }
+      val secs = PipelineAppSpec.sections(rep)
+      assert(secs.map(_._1).toSet == Aggregates.counterDims.map(_._1).toSet, rep)
+      assert(secs.forall(_._2.size == n), rep)
+      assert(rep.contains(s"--- status (top $n) ---"), rep)
+    }
+  }
+
+  test("COUNTER keyed sections are the oracle's top N, from at most 9·N keyed rows plus the totals") {
+    import spark.implicits._
+    val n = 3
+    val turns = Tables.localTurns(2000)
+    val p = ParseStage.parse(spark.createDataset(turns).toDF())
+    val oracle = RefOracle.keyedCounts(RefOracle.parseAll(turns).map(_._2))
+    Seq("client_ip", "path", "referer").foreach(d => assert(oracle(d).size > n, d))
+    // the pinned order: cnt descending, then the null key, then keys in
+    // UTF-8 byte order (Spark's string order)
+    def before(a: (Option[String], Long), b: (Option[String], Long)): Boolean =
+      if (a._2 != b._2) a._2 > b._2
+      else (a._1, b._1) match {
+        case (None, Some(_)) => true
+        case (Some(x), Some(y)) => java.util.Arrays.compareUnsigned(
+          x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          y.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+        case _ => false
+      }
+    val expected = oracle.map { case (dim, m) => dim -> m.toSeq.sortWith(before).take(n) }
+    assert(CounterReport.snapshot(p, n).keyed == expected)
+    // what the snapshot collects: at most 9·N keyed rows and the 5 totals,
+    // a fraction of the distinct keys counted (141 here)
+    val counts = Aggregates.counterCounts(p)
+    assert(Aggregates.counterTopN(counts, n).count() <= 9 * n + 5)
+    assert(counts.count() > 4 * (9 * n + 5))
   }
 
   test("multi-source config map: --default-- fills only absent fields (main.go:476-570)") {
@@ -486,6 +529,19 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs.size <= 11, s"${jobs.size} jobs")
   }
 
+  test("job_metrics.json is a JSON object with the run's rows and host id") {
+    val out = java.nio.file.Files.createTempDirectory("graft-jobmetrics").toString
+    val r = Pipeline.run(spark, sf, out, JobConfig(hostId = 7, handlers = Seq()))
+    val jm = JobConfig.mapper.readTree(java.nio.file.Paths.get(out, "_metrics", "job_metrics.json").toFile)
+    assert(jm.get("rows").isIntegralNumber && jm.get("rows").longValue == r.rows && r.rows == 6000)
+    assert(jm.get("host_id").isInt && jm.get("host_id").intValue == 7)
+    assert(jm.properties.asScala.toSeq.map(_.getKey).take(2) == Seq("rows", "host_id"))
+    // the host sample, when present: load1 as text, the rest as numbers
+    Option(jm.get("load1")).foreach(v => assert(v.isTextual, jm))
+    Seq("up_minutes", "mem_use", "mem_available").flatMap(k => Option(jm.get(k)))
+      .foreach(v => assert(v.isIntegralNumber, jm))
+  }
+
   test("one failing sink fails the run with its own exception, leaving no job or pool thread behind") {
     val out = java.nio.file.Files.createTempDirectory("graft-failing").toString
     // a regular file where routed/ goes: the fan-out's stats pass runs, then
@@ -527,4 +583,17 @@ class PipelineAppSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Files.delete(dump)
     }
   }
+}
+
+object PipelineAppSpec {
+
+  private val Header = """--- (\w+) \(top -?\d+\) ---""".r
+
+  /** a COUNTER report's keyed sections, in order: dimension → its key lines */
+  def sections(report: String): Seq[(String, Seq[String])] =
+    report.linesIterator.foldLeft(Vector.empty[(String, Vector[String])]) {
+      case (acc, Header(dim)) => acc :+ (dim -> Vector.empty[String])
+      case (acc, line) if acc.nonEmpty => acc.init :+ (acc.last._1 -> (acc.last._2 :+ line))
+      case (acc, _) => acc
+    }
 }

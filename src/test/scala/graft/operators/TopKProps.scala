@@ -1,15 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
 /** Property-style pins for the bounded-heap partial top-k
   * (`Bridge.collectTopK`, Spark's `collect_top_k`) and the orderings its
-  * callers encode as structs: against a plain sort-and-take oracle, under
-  * arbitrary partitioning, with duplicate scores, ties, and k larger than
+  * callers (`Similarity.topK`, `Aggregates.counterTopN`) encode as structs:
+  * against a plain sort-and-take oracle, under arbitrary partitioning, with duplicate scores, ties, and k larger than
   * the group (seeded deterministic random inputs).
   */
 class TopKProps extends AnyFunSuite with SparkTestBase {
@@ -40,19 +38,22 @@ class TopKProps extends AnyFunSuite with SparkTestBase {
   }
 
   test("collectTopK over (-cnt, key): cnt descending, then key with nulls first") {
+    // Aggregates.counterTopN, COUNTER's ranking: ties on cnt, a null key, a
+    // group smaller than k, and the totals passed through whole
     import spark.implicits._
     val rows = Seq(
       ("d1", Some("b"), 5L), ("d1", None, 5L), ("d1", Some("a"), 5L), ("d1", Some("z"), 9L),
-      ("d2", Some("x"), 1L))
-    val df = rows.map { case (d, k, c) => (d, k.orNull, c) }.toDF("dim", "key", "cnt").repartition(5)
-    val got = df.groupBy(col("dim"))
-      .agg(Bridge.collectTopK(struct((-col("cnt")).as("neg_cnt"), col("key")), 3,
-        smallest = true).as("top"))
-      .select(col("dim"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("dim"), col("e.key"), -col("e.neg_cnt"), (col("pos") + 1).as("rank"))
-      .collect().map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2), r.getInt(3))).toSet
-    assert(got == Set(
+      ("d2", Some("x"), 1L)) ++
+      (1 to 5).map(i => (Aggregates.TotalsDim, Some(s"t$i"), i.toLong))
+    val df = rows.map { case (d, k, c) => (d, k.orNull, c) }.toDF("dim", "key", "cnt")
+    val expected = Set(
       ("d1", Some("z"), 9L, 1), ("d1", None, 5L, 2), ("d1", Some("a"), 5L, 3),
-      ("d2", Some("x"), 1L, 1)))
+      ("d2", Some("x"), 1L, 1)) ++
+      (1 to 5).map(i => (Aggregates.TotalsDim, Some(s"t$i"), i.toLong, 6 - i))
+    Seq(1, 3, 5, 8).foreach { parts =>
+      val got = Aggregates.counterTopN(df.repartition(parts), 3).collect()
+        .map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2), r.getInt(3))).toSet
+      assert(got == expected, s"$parts partitions")
+    }
   }
 }

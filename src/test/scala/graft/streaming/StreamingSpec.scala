@@ -58,6 +58,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(lastTickTotals.map(_.trim) == batchTotals.map(_.trim))
   }
 
+  test("streaming counter ticks keep at most N keys per dimension after every tick") {
+    // counterTicks' state, tick by tick: each file's snapshot folds in the
+    // previous tick's
+    import graft.app.CounterReport
+    def parsed(path: String) = ParseStage.parse(spark.read.schema(Tables.transcriptSchema).parquet(path))
+    val files = new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    assert(files.length > 1)
+    val ticks = files.scanLeft(Option.empty[CounterReport.Snapshot]) { (prev, f) =>
+      Some(CounterReport.snapshot(parsed(f), 2, prev))
+    }.flatten
+    ticks.foreach(t => assert(t.keyed.size == 9 && t.keyed.values.forall(_.size <= 2), t))
+    assert(ticks.last.totals == CounterReport.snapshot(parsed(dir), 2).totals)
+  }
+
   test("log rotation: drain + reopen loses no rows (main.go:801-924 analog)") {
     // The reference tails a PATH: on fsnotify Rename/Remove it drains the old
     // handle, then reopens the recreated file (5×1s retries). The cluster
