@@ -108,8 +108,7 @@ object Similarity {
     * Re-ranking runs with small query sets broadcast and probe their
     * buckets locally; a batch-ANN run whose query set genuinely exceeds
     * the threshold (e.g. 10⁸ queries) falls back to shuffled equi-joins on
-    * the bucket key — same results, no broadcast OOM. Callers can force
-    * either path via the explicit parameter.
+    * the bucket key — same results, no broadcast OOM.
     */
   private def shouldBroadcastQueries(queries: DataFrame): Boolean = {
     val threshold = queries.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -150,9 +149,8 @@ object Similarity {
     * candidates only.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      planes: Int = 5, tables: Int = 16,
-      broadcastQueries: Option[Boolean] = None): DataFrame = {
-    val bcast = broadcastQueries.getOrElse(shouldBroadcastQueries(queries))
+      planes: Int = 5, tables: Int = 16): DataFrame = {
+    val bcast = shouldBroadcastQueries(queries)
     val su = sigsUdf(planes, tables)
     val c = corpus.select(col("vec_id").as("neighbor_id"), explode(su(col("embedding"))).as("sig"))
     val q = queries.select(col("vec_id").as("query_id"), explode(su(col("embedding"))).as("sig"))
@@ -293,13 +291,12 @@ object Similarity {
     * fits the registered small-corpus queries only.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, iters: Int = 4, nprobe: Int = 4,
-      broadcastQueries: Option[Boolean] = None): DataFrame = {
+      nlist: Int = 16, iters: Int = 4, nprobe: Int = 4): DataFrame = {
     val cents = kmeansCentroids(corpus, nlist, iters)
     val assigned = corpus
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
       .withColumn("cent", nearestCentUdf(cents)(col("c_emb")))
-    ivfTopKPreassigned(assigned, cents, queries, k, nprobe, broadcastQueries)
+    ivfTopKPreassigned(assigned, cents, queries, k, nprobe)
   }
 
   /** The query stage of IVF against a PRE-BUILT index — the production
@@ -312,9 +309,8 @@ object Similarity {
     * what the index already holds.
     */
   def ivfTopKPreassigned(assigned: DataFrame, cents: Array[Array[Float]],
-      queries: DataFrame, k: Int, nprobe: Int = 4,
-      broadcastQueries: Option[Boolean] = None): DataFrame = {
-    val bcast = broadcastQueries.getOrElse(shouldBroadcastQueries(queries))
+      queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
+    val bcast = shouldBroadcastQueries(queries)
     // probe list: (−cos, cent) structs sorted lexicographically = cos desc,
     // cent asc on ties — identical ordering to the oracle's window
     val probeEntries = centEntries(cents, col("q_emb"))

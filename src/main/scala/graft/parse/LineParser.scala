@@ -203,47 +203,6 @@ object LineParser {
     }
   }
 
-  /** Referer normalization — httpservers.go:79-93: a utm_source query param
-    * on the REQUEST URI overrides the referer header; otherwise the referer's
-    * hostname with a leading "www." stripped.
-    */
-  private val refererCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def refererHostCached(referer: String): String = {
-    // memoized: referer cardinality is small relative to rows; pure function
-    val hit = refererCache.get(referer)
-    if (hit != null) hit
-    else {
-      val host = GoUrl.refererHostname(referer)
-      val norm = if (host.startsWith("www.")) host.substring(4) else host
-      if (refererCache.size < 100000) refererCache.put(referer, norm)
-      norm
-    }
-  }
-
-  /** All URI-derived fields (path split, malicious class, utm_source
-    * override), memoized per URI string — the same bounded-pure-function memo
-    * as the referer/UA caches: path cardinality is far below row count in
-    * real logs (the reference re-derives per line single-threaded), and
-    * every field here is a pure function of the URI. utm is null when the
-    * URI carries no utm_source parameter (reUtmSource semantics).
-    */
-  private[parse] final case class UriFields(
-      path: String, p1: String, p2: String, p3: String, mal: Int, utm: String)
-
-  private val uriCache = new java.util.concurrent.ConcurrentHashMap[String, UriFields]()
-
-  private[parse] def uriFields(uri: String): UriFields = {
-    val hit = uriCache.get(uri)
-    if (hit != null) return hit
-    val (path, p1, p2, p3, mal) = pathFields(uri)
-    val m = reUtmSource.matcher(uri)
-    val utm = if (m.find()) m.group(2) else null
-    val uf = UriFields(path, p1, p2, p3, mal, utm)
-    if (uriCache.size < 100000) uriCache.put(uri, uf)
-    uf
-  }
-
   private def build(
       fmt: Format,
       domain: String, clientIp: String, logname: String, user: String,
@@ -253,24 +212,30 @@ object LineParser {
     // of a whole-second instant = new Timestamp(sec * 1000), nanos 0) without
     // the OffsetDateTime/Instant/ZoneOffset intermediates per line
     val ts = tsEpochOff(tsStr)
-    val uf = uriFields(uri)
+    val (path, p1, p2, p3, mal) = pathFields(uri)
+    // referer normalization — httpservers.go:79-93: a utm_source query param
+    // on the REQUEST URI overrides the referer header; otherwise the
+    // referer's hostname with a leading "www." stripped
     val referer = refererRaw.map { r =>
-      if (uf.utm != null) uf.utm
-      else if (r.nonEmpty) refererHostCached(r)
-      else ""
+      val utm = reUtmSource.matcher(uri)
+      if (utm.find()) utm.group(2)
+      else if (r.nonEmpty) {
+        val host = GoUrl.refererHostname(r)
+        if (host.startsWith("www.")) host.substring(4) else host
+      } else ""
     }.getOrElse("")
     val ua = uaRaw.map { u =>
       val base = UserAgents.classify(u)
-      if (uf.p1 == "/robots.txt") UserAgents.robotsOverride(base) else base
+      if (p1 == "/robots.txt") UserAgents.robotsOverride(base) else base
     }
     ParsedFields(
       domain = domain, client_ip = clientIp, remote_logname = logname, remote_user = user,
       log_ts = if (ts == TsNone) None
         else Some(new java.sql.Timestamp(Math.floorDiv(ts, 131072L) * 1000L)),
       tz_offset_sec = if (ts == TsNone) 0 else (Math.floorMod(ts, 131072L) - 64800L).toInt,
-      method = method, path = uf.path, path1 = uf.p1, path2 = uf.p2, path3 = uf.p3,
+      method = method, path = path, path1 = p1, path2 = p2, path3 = p3,
       protocol = protocol, status = status, bytes_sent = atoi(bytes),
-      referer = referer, ua = ua, malicious = uf.mal, format = fmt.name)
+      referer = referer, ua = ua, malicious = mal, format = fmt.name)
   }
 
   def parse(line: String, fmt: Format): Option[ParsedFields] = {

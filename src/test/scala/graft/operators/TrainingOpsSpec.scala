@@ -169,24 +169,27 @@ class TrainingOpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("ann large-query fallback: beyond-threshold query sets plan shuffled joins, identical top-k") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "1024") // 1 KB: any real query set exceeds it
-    try {
-      val queries = emb.filter(col("vec_id") < 64) // 64 x 64-float vectors >> 1 KB
-      def pairs(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      for ((name, run) <- Seq[(String, Option[Boolean] => org.apache.spark.sql.DataFrame)](
-          "lsh" -> (b => Similarity.lshTopK(emb, queries, 10, broadcastQueries = b)),
-          "ivf" -> (b => Similarity.ivfTopK(emb, queries, 10, broadcastQueries = b)))) {
-        val shuffled = run(None) // auto: stats exceed the 1 KB threshold -> shuffle
-        shuffled.collect()
-        val p = shuffled.queryExecution.executedPlan.toString
-        assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-          s"$name: expected a shuffled join beyond the broadcast threshold:\n${p.take(900)}")
-        assert(pairs(shuffled) == pairs(run(Some(true))),
-          s"$name: shuffle and broadcast paths must return the same top-k")
-      }
-    } finally spark.conf.set(key, prev)
+    val queries = emb.filter(col("vec_id") < 64) // 64 x 64-float vectors >> 1 KB
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for ((name, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "lsh" -> (() => Similarity.lshTopK(emb, queries, 10)),
+        "ivf" -> (() => Similarity.ivfTopK(emb, queries, 10)))) {
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "1024") // 1 KB: any real query set exceeds it
+      val shuffled =
+        try {
+          val df = run() // stats exceed the 1 KB threshold -> shuffle
+          df.collect()
+          val p = df.queryExecution.executedPlan.toString
+          assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+            s"$name: expected a shuffled join beyond the broadcast threshold:\n${p.take(900)}")
+          pairs(df)
+        } finally spark.conf.set(key, prev)
+      // the session's default threshold broadcasts the same query set
+      assert(shuffled == pairs(run()),
+        s"$name: shuffle and broadcast paths must return the same top-k")
+    }
   }
 
   test("ann broadcast decision: stats fire no job, measuring does") {

@@ -151,21 +151,6 @@ object ParseProps extends Properties("graft.parse") {
     }
   }
 
-  property("uriFields memo == pathFields + utm regex for pool and fuzzed URIs") = {
-    val genUri = Gen.frequency(
-      3 -> Gen.oneOf(TranscriptGen.benignPaths ++ TranscriptGen.queryPaths ++
-        TranscriptGen.maliciousPaths),
-      1 -> Gen.listOf(Gen.oneOf("/a", "/", "?", "&", "utm_source=x", "%zz", "%00",
-        "..", "'", "<script>", "a", ":", "//h:80")).map(_.mkString))
-    forAll(genUri) { uri =>
-      val uf = LineParser.uriFields(uri)
-      val (path, p1, p2, p3, mal) = LineParser.pathFields(uri)
-      val m = java.util.regex.Pattern.compile("(\\?|&)utm_source=([^&]+)(&|\\z)").matcher(uri)
-      val utm = if (m.find()) m.group(2) else null
-      uf == LineParser.UriFields(path, p1, p2, p3, mal, utm)
-    }
-  }
-
   property("keyed counts sum to the total for every dimension") =
     forAll(Gen.chooseNum(50, 400)) { n =>
       val parsed = RefOracle.parseAll(Tables.localTurns(n.toLong)).map(_._2)

@@ -143,4 +143,12 @@ class UserAgentsSpec extends AnyFunSuite {
     assert(buggy.ua_family == "Chrome")
     assert(buggy.ua_intent == "Processing")
   }
+
+  test("no generator UA is classified Human: the A1 humans total is always 0") {
+    // no rule in UserAgents returns HumanYes, and the reference fixtures
+    // above pin every browser UA to "Unknown"
+    val humans = graft.sources.TranscriptGen.uaPool.map(UserAgents.classify)
+      .filter(_.ua_human == UserAgents.HumanYes)
+    assert(humans.isEmpty, s"Human verdicts: ${humans.map(_.ua_full)}")
+  }
 }
