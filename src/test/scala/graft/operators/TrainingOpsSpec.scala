@@ -187,7 +187,12 @@ class TrainingOpsSpec extends AnyFunSuite with SparkTestBase {
           pairs(df)
         } finally spark.conf.set(key, prev)
       // the session's default threshold broadcasts the same query set
-      assert(shuffled == pairs(run()),
+      val bdf = run()
+      val broadcasted = pairs(bdf)
+      val bp = bdf.queryExecution.executedPlan.toString
+      assert(bp.contains("BroadcastHashJoin"),
+        s"$name: expected a broadcast join under the default threshold:\n${bp.take(900)}")
+      assert(shuffled == broadcasted,
         s"$name: shuffle and broadcast paths must return the same top-k")
     }
   }

@@ -4,11 +4,10 @@
 Run from anywhere:
 
     python3 tools/perfpairs.py --parent DIR --change DIR --out FILE \
-        [--pairs 10] [--first-seed 2] [--workloads clean,dirty_wide] \
-        [--parent-sha SHA] [--change-sha SHA]
+        [--pairs 10] [--first-seed 2] [--parent-sha SHA] [--change-sha SHA]
     python3 tools/perfpairs.py --summarize FILE
 
-For each workload (default: those in BENCHMARK.json) and each seed
+For each workload of BENCHMARK.json and each seed
 first-seed .. first-seed+pairs-1 it runs BENCHMARK.json's command
 (`python3 perfbench/run.py --workload W --seed N --seconds S --trace 0`)
 once in each checkout, one call at a time, the parent first on odd seeds
@@ -65,7 +64,7 @@ def call(bench, checkout, workload, seed):
 
 def run_pairs(bench, a):
     sides = {"parent": (a.parent, a.parent_sha), "change": (a.change, a.change_sha)}
-    workloads = a.workloads.split(",") if a.workloads else [w["name"] for w in bench["workloads"]]
+    workloads = [w["name"] for w in bench["workloads"]]
     with open(a.out, "a") as out:
         for w in workloads:
             for seed in range(a.first_seed, a.first_seed + a.pairs):
@@ -131,7 +130,6 @@ def main():
     ap.add_argument("--out", type=Path, help="JSON lines file to append to")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=2)
-    ap.add_argument("--workloads", help="comma-separated; default: BENCHMARK.json's")
     ap.add_argument("--parent-sha", default="parent")
     ap.add_argument("--change-sha", default="change")
     a = ap.parse_args()
